@@ -29,7 +29,7 @@ alongside the newest driver-recorded ``BENCH_r{N}.json``, never an
 interim in-round run — is loaded and a per-query ``deltas_vs_prev``
 block is emitted (the anchor used is named in ``baseline_anchor``). Every
 steady-state regression >15% is auto-probed in-session (4 extra warm
-runs, the tools/probe_regression.py protocol) and lands with a NAMED
+runs) and lands with a NAMED
 cause: ``converges-at-steady-state`` (probe best within 15% of prev —
 measurement depth, not a plan change), ``stage-metric-shift:<k>``
 (shuffle/spill delta >20% vs the previous round's stage metrics — a

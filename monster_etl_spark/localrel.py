@@ -14,6 +14,12 @@ execution time, constant-foldable, broadcast-cheap (round-11; guide §4
 schema)`` call sites whose results re-enter query plans (union-find
 components, BPE merge tables, manifest file lists). Types outside the
 Arrow conversion fall back to the plain path unchanged.
+
+The input side of the same driver tier lives here too: ``collect_bounded``
+is the one probe that decides whether an operator's input is small enough
+to solve on the driver, and ``DRIVER_EDGE_CAP`` / ``DRIVER_FIT_CAP`` are
+its only caps. Operators read the caps at call time, so a test forces the
+distributed tier by monkeypatching the constant to 0.
 """
 
 from __future__ import annotations
@@ -22,6 +28,26 @@ from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+#: Edge-count cap of the driver-side graph tiers (connected-components
+#: union-find, fixed-point PageRank): pair graphs are duplicates, not
+#: documents, so they sit far below it and larger graphs keep the
+#: distributed join loops.
+DRIVER_EDGE_CAP = 1_000_000
+
+#: Row cap of the driver-side k-means / PQ Lloyd fits; bounds driver
+#: memory (131072 x 64 doubles = 67 MB). Larger fit sets keep the
+#: distributed loop.
+DRIVER_FIT_CAP = 131_072
+
+
+def collect_bounded(df: DataFrame, cap: int):
+    """The driver tier's one probe: ``df`` as a ``pyarrow.Table`` in ONE
+    job, or ``None`` when it holds more than ``cap`` rows. The probe is
+    also the collect, so a small input's subtree runs once, and Arrow
+    moves the rows without per-Row pickling."""
+    tbl = df.limit(cap + 1).toArrow()
+    return None if tbl.num_rows > cap else tbl
 
 
 def spark_round(x: float, scale: int) -> float:

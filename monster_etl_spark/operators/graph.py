@@ -15,10 +15,11 @@ the DAG does not grow with iterations (the classic iterative-Spark trap).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from monster_etl_spark import localrel
 
 
 def _ensure_checkpoint_dir(df: DataFrame, checkpoint_dir: str | None) -> None:
@@ -61,37 +62,32 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 25,
-    driver_threshold: int = 1_000_000,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(node, component) for every node in ``pairs``; the component id is
     the minimum node id in the component (deterministic, engine-agnostic).
 
     Size-adaptive: near-dup pair graphs are tiny relative to the corpus
-    (pairs ~ duplicates, not documents), so when the edge count is under
-    ``driver_threshold`` the components are solved with a driver-side
-    union-find — one job instead of O(diameter) iterative joins. Larger
-    graphs use distributed min-label propagation. Both paths produce the
-    identical min-label result (cross-checked in tests); set
-    ``driver_threshold=0`` to force the distributed path.
+    (pairs ~ duplicates, not documents), so when the edge list fits under
+    ``localrel.DRIVER_EDGE_CAP`` (see ``_collect_edges``) the components
+    are solved with a driver-side union-find — one job instead of
+    O(diameter) iterative joins. Larger graphs, and graphs with a null
+    endpoint, use distributed min-label propagation. Both paths produce
+    the identical min-label result (cross-checked in tests, which force
+    the distributed path by setting the cap to 0).
 
     Raises if the distributed fixpoint is not reached within ``max_iter``
     rounds (a diameter larger than max_iter — raise the bound for
     pathological chain-shaped graphs).
 
     ``checkpoint_dir``: pass a shared-FS/object-store URI to make every
-    lineage-truncation point a RELIABLE checkpoint instead of the
-    default executor-local ``localCheckpoint`` — required for runs long
-    enough that executor loss is expected (see ``_truncate_lineage``).
+    lineage-truncation point of the distributed path a RELIABLE
+    checkpoint instead of the default executor-local ``localCheckpoint``
+    — required for runs long enough that executor loss is expected (see
+    ``_truncate_lineage``).
     """
-    # single materialization probe: take(threshold+1) both decides the path
-    # and, on the fast path, already holds every edge (a separate count()
-    # would compute the expensive pair subtree twice)
-    edge_rows = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")).take(
-        driver_threshold + 1
-    )
-    if len(edge_rows) <= driver_threshold:
-        spark = pairs.sparkSession
+    got = _collect_edges(pairs, src, dst)
+    if got is not None:
         parent: dict = {}
 
         def find(x):
@@ -101,24 +97,15 @@ def connected_components(
                 x = parent[x]
             return x
 
-        for r in edge_rows:
-            ra, rb = find(r["a"]), find(r["b"])
+        for a, b in zip(*got):
+            ra, rb = find(a), find(b)
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
         comp: dict = {}
         for n in list(parent):
             comp.setdefault(find(n), []).append(n)
         rows = [(n, min(members)) for members in comp.values() for n in members]
-        # node type = union-coerced type of BOTH id columns, matching the
-        # distributed path (src-only typing would silently narrow dst ids)
-        node_schema = (
-            pairs.select(F.col(src).alias("node"))
-            .unionByName(pairs.select(F.col(dst).alias("node")))
-            .schema
-        )
-        node_type = node_schema["node"].dataType
-        from pyspark.sql import types as T
-
+        node_type = _node_type(pairs, src, dst)
         schema = T.StructType(
             [T.StructField("node", node_type), T.StructField("component", node_type)]
         )
@@ -126,9 +113,7 @@ def connected_components(
         # pickled-RDD-backed and re-runs a 32-task Python-worker wave on
         # EVERY downstream broadcast build of the component table
         # (measured ~0.5 s/eval inside q_corpus_curation — round-11)
-        from monster_etl_spark.localrel import local_df
-
-        return local_df(spark, rows, schema)
+        return localrel.local_df(pairs.sparkSession, rows, schema)
 
     _ensure_checkpoint_dir(pairs, checkpoint_dir)
     edges = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -242,30 +227,33 @@ def bfs_hops(
     return visited
 
 
-#: Edge-count cap for the driver-side PageRank tier — the same
-#: size-adaptive routing (and the same default bound) as
-#: ``connected_components``' union-find fast path. 0 disables.
-PAGERANK_DRIVER_EDGE_CAP = int(
-    os.environ.get("SPARK_GRAFT_PAGERANK_DRIVER_EDGE_CAP", "1000000")
-)
-
-
-def _collect_edges(edges: DataFrame, src: str, dst: str, cap: int):
-    """One-job bounded Arrow collect of (src, dst): ``(s_list, d_list)``
-    or ``None`` when over ``cap`` or any endpoint is null (the
-    distributed join semantics handle nulls; the driver tier does not
-    reproduce them)."""
-    tbl = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .limit(cap + 1)
-        .toArrow()
+def _collect_edges(edges: DataFrame, src: str, dst: str):
+    """The graph driver tiers' input: ``(s_list, d_list)`` from one
+    bounded Arrow collect, or ``None`` when the edge list is over
+    ``localrel.DRIVER_EDGE_CAP`` or any endpoint is null (the distributed
+    join semantics handle nulls; the driver tiers do not reproduce them)."""
+    tbl = localrel.collect_bounded(
+        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")),
+        localrel.DRIVER_EDGE_CAP,
     )
-    if tbl.num_rows > cap:
+    if tbl is None:
         return None
     s, d = tbl.column("_s"), tbl.column("_d")
     if s.null_count or d.null_count:
         return None
     return s.to_pylist(), d.to_pylist()
+
+
+def _node_type(edges: DataFrame, src: str, dst: str):
+    """Node type = union-coerced type of BOTH endpoint columns, exactly as
+    the distributed paths' ``union(...).distinct()`` resolves it
+    (src-only typing would silently narrow dst ids)."""
+    return (
+        edges.select(F.col(src).alias("node"))
+        .unionByName(edges.select(F.col(dst).alias("node")))
+        .schema["node"]
+        .dataType
+    )
 
 
 def _pagerank_driver(
@@ -286,21 +274,9 @@ def _pagerank_driver(
     overflow for the documented ``base``."""
     import numpy as np
 
-    from monster_etl_spark.localrel import local_df, spark_round
-
-    # node type = union-coerced type of BOTH endpoint columns, exactly as
-    # the distributed path's union(...).distinct() resolves it
-    node_type = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
-        .schema["node"]
-        .dataType
-    )
-    from pyspark.sql import types as T
-
     schema = T.StructType(
         [
-            T.StructField("node", node_type),
+            T.StructField("node", _node_type(edges, src, dst)),
             T.StructField("rank_fp", T.LongType()),
             T.StructField("rank", T.DoubleType()),
         ]
@@ -309,7 +285,7 @@ def _pagerank_driver(
     nodes = sorted(set(s_list) | set(d_list))
     n = len(nodes)
     if n == 0:
-        return local_df(spark, [], schema)
+        return localrel.local_df(spark, [], schema)
     idx = {v: i for i, v in enumerate(nodes)}
     s_idx = np.fromiter((idx[v] for v in s_list), dtype=np.int64, count=len(s_list))
     d_idx = np.fromiter((idx[v] for v in d_list), dtype=np.int64, count=len(d_list))
@@ -325,9 +301,9 @@ def _pagerank_driver(
         ranks = tele + (d * in_sum) // 100
     fb = float(base)
     rows = [
-        (v, int(r), spark_round(int(r) / fb, 6)) for v, r in zip(nodes, ranks)
+        (v, int(r), localrel.spark_round(int(r) / fb, 6)) for v, r in zip(nodes, ranks)
     ]
-    return local_df(spark, rows, schema)
+    return localrel.local_df(spark, rows, schema)
 
 
 def pagerank_fixed_point(
@@ -363,13 +339,13 @@ def pagerank_fixed_point(
 
     Returns (node, rank_fp, rank) — the exact fixed-point long and the
     convenience double ``rank_fp / base`` rounded 6dp. ``checkpoint_dir``
-    upgrades the edge materialization to a reliable checkpoint (see
-    ``_truncate_lineage``).
+    upgrades the distributed path's edge materialization to a reliable
+    checkpoint (see ``_truncate_lineage``).
 
     Size-adaptive (round-11): when the edge list fits under
-    ``PAGERANK_DRIVER_EDGE_CAP`` rows it is collected once (same bounded
-    take as ``connected_components``' union-find path) and the identical
-    integer recurrence runs in numpy on the driver — every step is long
+    ``localrel.DRIVER_EDGE_CAP`` rows it is collected once (the same
+    ``_collect_edges`` as ``connected_components``' union-find path) and
+    the identical integer recurrence runs in numpy on the driver — every step is long
     addition/multiplication and floor division on non-negative values,
     so the driver result is bit-identical BY CONSTRUCTION, not merely
     within a rounding band. This replaces the edge/deg/rank
@@ -378,12 +354,11 @@ def pagerank_fixed_point(
     tools/profile_query.py) with one collect. Larger graphs keep the
     distributed loop.
     """
-    if PAGERANK_DRIVER_EDGE_CAP > 0 and checkpoint_dir is None:
-        got = _collect_edges(edges, src, dst, PAGERANK_DRIVER_EDGE_CAP)
-        if got is not None:
-            return _pagerank_driver(
-                edges, got[0], got[1], iterations, int(damping_pct), base, src, dst
-            )
+    got = _collect_edges(edges, src, dst)
+    if got is not None:
+        return _pagerank_driver(
+            edges, got[0], got[1], iterations, int(damping_pct), base, src, dst
+        )
     # Materialize the edge list ONCE before iterating: every round joins
     # it, and so do nodes/deg — without this the edge lineage (often an
     # expensive derivation, e.g. the Apriori pair mine feeding

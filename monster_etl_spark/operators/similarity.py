@@ -14,11 +14,10 @@ summation strategies and oracle-checkable in DuckDB.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from monster_etl_spark import localrel
 from monster_etl_spark.operators.partitioning import spread as _spread
 
 SIGN_LSH_DIMS = 8  # first b dims' sign bits form the bucket key
@@ -294,24 +293,6 @@ def embedding_dup_pairs(
 IVF_CENTROIDS = 16
 IVF_PROBES = 4
 IVF_KMEANS_ITERS = 3
-# Row cap for the DRIVER-side Lloyd fit (round-11; guide §1.2 "the
-# distributed algorithm"): a k-means fit over a few thousand vectors is
-# pure fixed overhead as a distributed loop — ~15 driver-synchronous jobs
-# (probes, per-round broadcast builds, eager checkpoints) each paying
-# planning + scheduling latency, measured 2.3 s of knn_ivf's 3.1 s at
-# sf0.1 (2,000 x 64 corpus; tools/profile_query.py). Below this many FIT
-# rows the fit collects the (already unit-normalized / sub-sliced)
-# vectors in ONE Arrow job and runs the identical Lloyd recurrence in
-# numpy on the driver: dots are exact left folds (cumsum), rounding is
-# the Spark shortest-decimal-repr HALF_UP (see tools/tie_sweep.py), ties
-# and empty-cell dropout replicate the struct-ordering semantics, so the
-# centroids are the same values the distributed loop emits (oracle-gated
-# at every driver sf). Same size-adaptive precedent as
-# connected_components' driver_threshold and the OPQ sample collect; the
-# cap bounds driver memory (131072 x 64 doubles = 67 MB) and large
-# corpora keep the distributed loop. 0 disables the driver tier.
-KMEANS_DRIVER_FIT_CAP = int(os.environ.get("SPARK_GRAFT_KMEANS_DRIVER_FIT_CAP", "131072"))
-
 # Width cap for the fixed-dimension wide-aggregate mean fast path in the
 # Lloyd loops (kmeans_centroids / pq_codebooks). d parallel avg() buffers
 # stop paying for themselves well before the codegen field budget:
@@ -320,7 +301,7 @@ KMEANS_DRIVER_FIT_CAP = int(os.environ.get("SPARK_GRAFT_KMEANS_DRIVER_FIT_CAP", 
 # rescue it), while knn_pq's 8-wide subspace aggregate wins 2.88 vs 3.17.
 # So: narrow fixed-dim corpora (PQ subspaces, low-d vectors) take the
 # one-exchange wide path; everything else keeps the explode path.
-KMEANS_WIDE_DIM_CAP = int(os.environ.get("SPARK_GRAFT_KMEANS_WIDE_DIM_CAP", "16"))
+KMEANS_WIDE_DIM_CAP = 16
 
 #: cell count below which two-level assignment cannot win: per-row cost is
 #: ~(1 + sup_probes) * sqrt(cells) dots vs ``cells`` flat, so the crossover
@@ -422,7 +403,7 @@ def _with_unit(df: DataFrame, vec_col: str, out_col: str) -> DataFrame:
     re-running the norm |vec| times per row. ``zip_with`` against
     ``array_repeat(norm, size)`` keeps the norm in argument position —
     evaluated once per row no matter how projections collapse."""
-    vnorm = F.expr(_norm_sql(_as_double_sql(vec_col)))
+    vnorm = F.expr(_norm_sql(_as_double_sql(_qid(vec_col))))
     return df.withColumn(
         out_col,
         F.when(
@@ -465,9 +446,7 @@ def _scored_cents(vec: Column) -> Column:
 def _spark_round(x: float, scale: int = 9) -> float:
     """Driver replica of Spark's ``round(double, n)`` — see
     :func:`monster_etl_spark.localrel.spark_round`."""
-    from monster_etl_spark.localrel import spark_round
-
-    return spark_round(x, scale)
+    return localrel.spark_round(x, scale)
 
 
 def _fold_dots(V, C):
@@ -494,20 +473,24 @@ def _fold_sq(x) -> float:
     return float(np.cumsum(sq)[-1]) if len(sq) else 0.0
 
 
-def _collect_fit_rows(df: DataFrame, id_name: str, vec_name: str, cap: int):
+def _collect_fit_rows(df: DataFrame, id_name: str, vec_name: str):
     """ONE-job bounded Arrow collect of a fit set: ``(ids, V)`` sorted by
-    id, or ``None`` when the set exceeds ``cap`` rows or is ragged (the
-    distributed loop handles both). The vectors are collected AFTER all
-    Spark-side derivation (double cast / unit normalization), so the
-    driver sees bit-identical doubles."""
+    id, or ``None`` when the set exceeds ``localrel.DRIVER_FIT_CAP`` rows
+    or holds null, ragged or zero-dimension vectors (the distributed loop
+    handles all of these). The vectors are collected AFTER all Spark-side
+    derivation (double cast / unit normalization), so the driver sees
+    bit-identical doubles."""
     import numpy as np
 
-    tbl = df.select(
-        F.col(id_name).alias("_fid"), F.col(vec_name).alias("_fv")
-    ).limit(cap + 1).toArrow()
+    tbl = localrel.collect_bounded(
+        df.select(F.col(id_name).alias("_fid"), F.col(vec_name).alias("_fv")),
+        localrel.DRIVER_FIT_CAP,
+    )
+    if tbl is None:
+        return None
     n = tbl.num_rows
-    if n == 0 or n > cap:
-        return None if n else ([], None)
+    if n == 0:
+        return [], None
     col = tbl.column("_fv").combine_chunks()
     if col.null_count:
         # null VECTORS: the distributed paths drop them (filter /
@@ -715,20 +698,18 @@ def kmeans_centroids(
         return out
 
     # driver tier (round-11): when the fit set is small enough to collect
-    # (<= KMEANS_DRIVER_FIT_CAP rows, fixed-dim), ONE Arrow job replaces
-    # the whole distributed Lloyd loop's ~15 driver-synchronous jobs —
-    # same recurrence, same values (see _kmeans_driver_fit). The collect
-    # side skips ``_spread``'s round-robin exchange (it exists for the
-    # loop's parallelism, not for a single funnel-to-driver job).
-    # Oversized or ragged fit sets fall through to the distributed loop
-    # unchanged.
-    if KMEANS_DRIVER_FIT_CAP > 0:
-        got = _collect_fit_rows(_prep(base), "cid", "v", KMEANS_DRIVER_FIT_CAP)
-        if got is not None:
-            ids, V = got
-            return _kmeans_driver_fit(
-                corpus.sparkSession, ids, V, n_centroids, iters
-            )
+    # (<= localrel.DRIVER_FIT_CAP rows, fixed-dim), ONE Arrow job replaces
+    # the whole distributed Lloyd loop's ~15 driver-synchronous jobs
+    # (measured 2.3 s of knn_ivf's 3.1 s at sf0.1) — same recurrence,
+    # same values, oracle-gated at every driver sf (see
+    # _kmeans_driver_fit). The collect side skips ``_spread``'s
+    # round-robin exchange (it exists for the loop's parallelism, not for
+    # a single funnel-to-driver job). Oversized or ragged fit sets fall
+    # through to the distributed loop unchanged.
+    got = _collect_fit_rows(_prep(base), "cid", "v")
+    if got is not None:
+        ids, V = got
+        return _kmeans_driver_fit(corpus.sparkSession, ids, V, n_centroids, iters)
     v = _prep(_spread(base))
     dim = None
     if iters > 0:
@@ -1829,14 +1810,15 @@ def covariance_moments(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
     aggregate; see ``queries.similarity_queries.embedding_covariance``
     for the hash-matched SQL twin. Returns (dim_i, dim_j, cov) 1-based.
     """
+    v = _qid(vec_col)
     pairs = emb.select(
         F.explode(
             F.expr(
-                f"""flatten(transform(sequence(1, size({vec_col})), i ->
-                     transform(sequence(i, size({vec_col})), j ->
+                f"""flatten(transform(sequence(1, size({v})), i ->
+                     transform(sequence(i, size({v})), j ->
                        struct(i AS i, j AS j,
-                         CAST(CAST(element_at({vec_col}, i) AS DECIMAL(18,9))
-                              * CAST(element_at({vec_col}, j) AS DECIMAL(18,9))
+                         CAST(CAST(element_at({v}, i) AS DECIMAL(18,9))
+                              * CAST(element_at({v}, j) AS DECIMAL(18,9))
                               AS DECIMAL(38,18)) AS xy))))"""
             )
         ).alias("p")
@@ -2048,18 +2030,16 @@ def pq_codebooks(
     # sub-sliced in numpy (slicing moves no arithmetic), so the ~15
     # probe/broadcast/checkpoint jobs of the distributed subspace loop
     # collapse to one. Oversized/ragged fit sets keep the loop.
-    if KMEANS_DRIVER_FIT_CAP > 0:
-        got = _collect_fit_rows(
-            corpus_fit.select(
-                F.col(id_col).alias("cid"), _as_double(F.col(vec_col)).alias("v")
-            ),
-            "cid",
-            "v",
-            KMEANS_DRIVER_FIT_CAP,
-        )
-        if got is not None:
-            ids, V = got
-            return _pq_driver_fit(corpus.sparkSession, ids, V, m, n_codes, iters)
+    got = _collect_fit_rows(
+        corpus_fit.select(
+            F.col(id_col).alias("cid"), _as_double(F.col(vec_col)).alias("v")
+        ),
+        "cid",
+        "v",
+    )
+    if got is not None:
+        ids, V = got
+        return _pq_driver_fit(corpus.sparkSession, ids, V, m, n_codes, iters)
     sub = _spread(_sub_rows(corpus_fit, id_col, vec_col, m))
     dim = None
     if iters > 0:

@@ -37,6 +37,7 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    cores = (os.cpu_count() or 32) if cpus == "*" else int(cpus)
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -60,8 +61,7 @@ def get_spark(
     # size, so small SFs land on a handful of tasks while a 21 GB shuffle
     # keeps ~hundreds of ~64 MB partitions — the 128-256 MB/partition rule
     # applied automatically instead of via an env knob.
-    env_init = os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS")
-    initial_partitions = int(env_init) if env_init else max(1024, shuffle_partitions)
+    initial_partitions = max(1024, shuffle_partitions)
 
     builder = (
         SparkSession.builder.master(master)
@@ -111,17 +111,16 @@ def get_spark(
         # user-code call-site enrichment (round-11; guide §4 — the
         # JVM<->Python boundary exists on the driver too).
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        # executeTake's incremental partition scan (1, then x4 per wave)
-        # serializes every bounded probe: CC's take(cap+1) on the jaccard
-        # pair subtree ran as FOUR sequential jobs of 1/4/16/11 tasks
-        # (~2.1 s of the q_corpus_curation wall at sf0.1, stage-level
-        # evidence in OPTIMIZATION_r12.md). Starting the first wave at
-        # the core count turns that into one parallel wave. Scale-safe:
-        # extra work per take() is bounded by (cores - 1) partitions,
-        # and every take/limit site in this engine is a bounded probe on
-        # an expensive subtree, where one wave strictly wins (round-12;
-        # guide §2.6 stragglers/idle capacity).
-        .config("spark.sql.limit.initialNumPartitions", str(shuffle_partitions))
+        # executeTake's incremental partition scan (1 partition, then x4
+        # per wave) serializes every bounded take()/first() probe on an
+        # expensive subtree into several sequential jobs; starting the
+        # first wave at the core count runs it as one parallel wave, at
+        # the price of at most (cores - 1) extra partitions per probe.
+        # Capped at the core count so a large shuffle_partitions does not
+        # inflate the first wave. This setting is unproven at 32 cores
+        # and stays only until the local[32] task-count and executor-time
+        # evidence the ROADMAP asks for exists.
+        .config("spark.sql.limit.initialNumPartitions", str(min(shuffle_partitions, cores)))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.ansi.enabled", "true" if ansi else "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -6,6 +6,8 @@ with a stub registry so the probe runs are deterministic and cheap."""
 import json
 import os
 
+import pytest
+
 import bench
 
 

@@ -6,6 +6,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from monster_etl_spark import localrel
 from monster_etl_spark.operators.graph import connected_components, dedup_survivors
 
 
@@ -41,10 +42,11 @@ def _check(spark, edges):
     # both the driver union-find fast path and the distributed propagation
     # path must produce the identical min-label result
     got_fast = {r["node"]: r["component"] for r in connected_components(pairs).collect()}
-    got_dist = {
-        r["node"]: r["component"]
-        for r in connected_components(pairs, driver_threshold=0).collect()
-    }
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(localrel, "DRIVER_EDGE_CAP", 0)
+        got_dist = {
+            r["node"]: r["component"] for r in connected_components(pairs).collect()
+        }
     assert got_fast == expected
     assert got_dist == expected
 
@@ -66,6 +68,20 @@ def test_random_graph_matches_union_find(spark):
     _check(spark, edges)
 
 
+def test_null_endpoint_matches_distributed(spark, monkeypatch):
+    """A pair with a null endpoint falls through to the distributed tier
+    at the default caps (the driver union-find cannot order None), so
+    both runs give the same rows."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (None, 4), (5, None), (10, 11)], "doc_a bigint, doc_b bigint"
+    )
+    default = sorted(map(tuple, connected_components(pairs).collect()), key=str)
+    monkeypatch.setattr(localrel, "DRIVER_EDGE_CAP", 0)
+    dist = sorted(map(tuple, connected_components(pairs).collect()), key=str)
+    assert default == dist
+    assert (3, 1) in default and (11, 10) in default
+
+
 def test_dedup_survivors(spark):
     df = spark.createDataFrame([(i, f"d{i}") for i in range(6)], "doc_id bigint, text string")
     pairs = spark.createDataFrame([(0, 1), (1, 2), (4, 5)], "doc_a bigint, doc_b bigint")
@@ -74,7 +90,7 @@ def test_dedup_survivors(spark):
     assert kept == [0, 3, 4]
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
+def test_connected_components_reliable_checkpoint(spark, tmp_path, monkeypatch):
     """checkpoint_dir knob: the distributed min-label path with a RELIABLE
     checkpoint (file:/ here; HDFS/object store on a cluster) must produce
     the same components as the default localCheckpoint path, and must
@@ -88,15 +104,11 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)], "doc_a: long, doc_b: long"
     )
     ckpt = str(tmp_path / "ckpt")
-    local = {
-        (r.node, r.component)
-        for r in connected_components(pairs, driver_threshold=0).collect()
-    }
+    monkeypatch.setattr(localrel, "DRIVER_EDGE_CAP", 0)
+    local = {(r.node, r.component) for r in connected_components(pairs).collect()}
     reliable = {
         (r.node, r.component)
-        for r in connected_components(
-            pairs, driver_threshold=0, checkpoint_dir=ckpt
-        ).collect()
+        for r in connected_components(pairs, checkpoint_dir=ckpt).collect()
     }
     assert reliable == local
     assert {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)} <= reliable
@@ -105,13 +117,16 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     assert found, "no checkpoint files written under checkpoint_dir"
 
 
-def test_pagerank_reliable_checkpoint_matches(spark, tmp_path):
+def test_pagerank_reliable_checkpoint_matches(spark, tmp_path, monkeypatch):
+    """The driver tier's ranks equal the distributed loop's under a
+    reliable checkpoint."""
     from monster_etl_spark.operators.graph import pagerank_fixed_point
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 2)], "src: long, dst: long"
     )
     a = {(r.node, r.rank_fp) for r in pagerank_fixed_point(edges, iterations=3).collect()}
+    monkeypatch.setattr(localrel, "DRIVER_EDGE_CAP", 0)
     b = {
         (r.node, r.rank_fp)
         for r in pagerank_fixed_point(

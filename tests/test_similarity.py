@@ -3,6 +3,7 @@ brute-force top-k."""
 
 import pytest
 
+from monster_etl_spark import localrel
 from monster_etl_spark.operators import similarity as sim
 from monster_etl_spark.queries import load
 
@@ -59,9 +60,9 @@ def test_driver_fit_tier_matches_distributed(spark, sf_dir, monkeypatch):
 
     def both(fn):
         drv = sorted(map(str, fn().collect()))
-        monkeypatch.setattr(sim, "KMEANS_DRIVER_FIT_CAP", 0)
-        dist = sorted(map(str, fn().collect()))
-        monkeypatch.setattr(sim, "KMEANS_DRIVER_FIT_CAP", 131072)
+        with monkeypatch.context() as m:
+            m.setattr(localrel, "DRIVER_FIT_CAP", 0)
+            dist = sorted(map(str, fn().collect()))
         return drv, dist
 
     drv, dist = both(lambda: sim.kmeans_centroids(emb))
@@ -367,6 +368,25 @@ def test_covariance_moments_symmetric_psd(spark, sf_dir):
     evs = np.linalg.eigvalsh(cov)
     assert evs.min() > -1e-9  # PSD up to float noise
     assert cov.diagonal().min() > 0
+
+
+def test_special_char_vector_column(spark, sf_dir):
+    """The parsed-SQL paths that name the vector column (the covariance
+    expansion, unit normalization inside IVF cell assignment) quote it:
+    a special-character name gives the same rows as ``embedding``."""
+    emb = load(spark, sf_dir, "embeddings")
+    odd = emb.withColumnRenamed("embedding", "vec-x")
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    assert rows(sim.covariance_moments(odd, "vec-x")) == rows(sim.covariance_moments(emb))
+    cents = sim._centroid_array(sim.kmeans_centroids(emb, n_centroids=4, iters=1))
+
+    def cells(df, vec_col):
+        return rows(sim._ivf_assign(df, cents, "vec_id", vec_col, "u", top=2))
+
+    assert cells(odd, "vec-x") == cells(emb, "embedding")
 
 
 def test_pq_recall_vs_brute_force(spark, sf_dir):
