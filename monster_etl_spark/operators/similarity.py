@@ -27,23 +27,22 @@ def _as_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
 
 
-# --- SQL-string twins (round-11) -------------------------------------------
-# The Column-API construction of a cosine is ~50 py4j round trips; every
-# similarity query rebuilds it on every timed bench run. When the caller
-# can name its columns, the same Catalyst tree (identical HOF lambdas,
-# double literals via the 0.0D suffix) is parsed in ONE round trip.
-# dot/norm/cosine below accept either a Column (unchanged behavior) or a
-# string column reference (parsed fast path).
+# --- expression builders ------------------------------------------------
+# Every builder takes column NAMES and returns one parsed SQL expression:
+# the Column-API construction of a cosine is ~50 py4j round trips, the
+# parsed string is one, for the same Catalyst tree (identical HOF
+# lambdas, double literals via the 0.0D suffix). Names are quoted by
+# ``_qid`` at the builder boundary; the ``_*_sql`` helpers compose
+# already-quoted fragments.
 
 
 def _qid(name: str) -> str:
-    """Backtick-quote a plain or dot-qualified column identifier for the
-    parsed SQL fast paths (round-11 advice: a reserved-word or
-    special-char column name broke parsing / mis-resolved where the
-    Column path handled it). Splitting on '.' treats each segment as one
-    identifier — matching how every caller writes qualified refs
-    ("a.vec"); a column whose NAME contains a literal dot must use the
-    Column overloads."""
+    """Backtick-quote a plain or dot-qualified column identifier, so a
+    reserved-word or special-character column name parses and resolves.
+    Splitting on '.' treats each segment as one identifier — matching
+    how every caller writes qualified refs ("a.vec"); a column whose
+    NAME contains a literal dot must be renamed before it reaches a
+    builder."""
     return ".".join("`" + part.replace("`", "``") + "`" for part in name.split("."))
 
 
@@ -59,12 +58,7 @@ def _norm_sql(a: str) -> str:
     return f"sqrt(aggregate({a}, 0.0D, (acc, x) -> acc + x * x))"
 
 
-def _cosine_sql(a: str, b: str) -> str:
-    da, db = _as_double_sql(a), _as_double_sql(b)
-    return f"({_dot_sql(da, db)} / nullif({_norm_sql(da)} * {_norm_sql(db)}, 0.0D))"
-
-
-def dot(a: Column | str, b: Column | str) -> Column:
+def dot(a: str, b: str) -> Column:
     """Sequential-fold dot product (index order, deterministic).
 
     Measured fastest of the JVM-side strategies (512k x d=64, local):
@@ -75,22 +69,16 @@ def dot(a: Column | str, b: Column | str) -> Column:
     step-change beyond it is the Arrow select-then-rescore kernel
     (``brute_force_topk_arrow`` / ``ivf_topk_arrow``), the two audited
     named exceptions to the JVM-only policy."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(_qid(a), _qid(b)))
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+    return F.expr(_dot_sql(_qid(a), _qid(b)))
 
 
-def norm(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return F.expr(_norm_sql(_qid(a)))
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+def norm(a: str) -> Column:
+    return F.expr(_norm_sql(_qid(a)))
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_cosine_sql(_qid(a), _qid(b)))
-    da, db = _as_double(a), _as_double(b)
-    return dot(da, db) / F.nullif(norm(da) * norm(db), F.lit(0.0))
+def cosine(a: str, b: str) -> Column:
+    da, db = _as_double_sql(_qid(a)), _as_double_sql(_qid(b))
+    return F.expr(f"({_dot_sql(da, db)} / nullif({_norm_sql(da)} * {_norm_sql(db)}, 0.0D))")
 
 
 def brute_force_topk(
@@ -130,61 +118,41 @@ def brute_force_topk(
     )
 
 
-def sign_bucket(vec: Column | str, dims: int = SIGN_LSH_DIMS) -> Column:
+def sign_bucket(vec: str, dims: int = SIGN_LSH_DIMS) -> Column:
     """LSH bucket key: sign bits of the first ``dims`` components, as a
     string like ``"10110010"``. Equivalent to random-hyperplane LSH with
-    axis-aligned planes — deterministic and SQL-expressible. A string
-    argument takes the one-round-trip parsed path (round-11)."""
-    if isinstance(vec, str):
-        vec = _qid(vec)
-        cases = ", ".join(
-            f"CASE WHEN CAST(element_at({vec}, {i + 1}) AS DOUBLE) >= 0 "
-            "THEN '1' ELSE '0' END"
-            for i in range(dims)
-        )
-        return F.expr(f"concat({cases})")
-    bits = [
-        F.when(F.element_at(vec, i + 1).cast("double") >= 0, F.lit("1")).otherwise(F.lit("0"))
+    axis-aligned planes — deterministic and SQL-expressible."""
+    vec = _qid(vec)
+    cases = ", ".join(
+        f"CASE WHEN CAST(element_at({vec}, {i + 1}) AS DOUBLE) >= 0 "
+        "THEN '1' ELSE '0' END"
         for i in range(dims)
-    ]
-    return F.concat(*bits)
+    )
+    return F.expr(f"concat({cases})")
 
 
-def multiprobe_buckets(vec: Column | str, dims: int = SIGN_LSH_DIMS) -> Column:
+def multiprobe_buckets(vec: str, dims: int = SIGN_LSH_DIMS) -> Column:
     """Multi-probe LSH probe set: the exact sign pattern plus every
     1-bit-flipped pattern (``dims + 1`` probes). Probing neighbors in
     sign-space recovers most of the recall lost to bucketing WITHOUT
     growing corpus-side buckets — only the (small) query side fans out,
-    so the join stays linear in bucket sizes. A string argument takes
-    the one-round-trip parsed path (round-11)."""
-    if isinstance(vec, str):
-        vec = _qid(vec)
+    so the join stays linear in bucket sizes."""
+    vec = _qid(vec)
 
-        def bit_sql(i: int) -> str:
-            return (
-                f"CASE WHEN CAST(element_at({vec}, {i + 1}) AS DOUBLE) >= 0 "
-                "THEN 1 ELSE 0 END"
-            )
-
-        def pattern_sql(flip: int) -> str:
-            return "concat(" + ", ".join(
-                f"CAST({f'1 - ({bit_sql(i)})' if i == flip else bit_sql(i)} AS STRING)"
-                for i in range(dims)
-            ) + ")"
-
-        probes = ", ".join(pattern_sql(f) for f in [-1, *range(dims)])
-        return F.expr(f"array({probes})")
-    bits = [
-        F.when(F.element_at(vec, i + 1).cast("double") >= 0, F.lit(1)).otherwise(F.lit(0))
-        for i in range(dims)
-    ]
-
-    def pattern(flip: int) -> Column:
-        return F.concat(
-            *[(F.lit(1) - b if i == flip else b).cast("string") for i, b in enumerate(bits)]
+    def bit_sql(i: int) -> str:
+        return (
+            f"CASE WHEN CAST(element_at({vec}, {i + 1}) AS DOUBLE) >= 0 "
+            "THEN 1 ELSE 0 END"
         )
 
-    return F.array(pattern(-1), *[pattern(i) for i in range(dims)])
+    def pattern_sql(flip: int) -> str:
+        return "concat(" + ", ".join(
+            f"CAST({f'1 - ({bit_sql(i)})' if i == flip else bit_sql(i)} AS STRING)"
+            for i in range(dims)
+        ) + ")"
+
+    probes = ", ".join(pattern_sql(f) for f in [-1, *range(dims)])
+    return F.expr(f"array({probes})")
 
 
 def lsh_topk(
@@ -304,26 +272,33 @@ IVF_KMEANS_ITERS = 3
 KMEANS_WIDE_DIM_CAP = 16
 
 #: cell count below which two-level assignment cannot win: per-row cost is
-#: ~(1 + sup_probes) * sqrt(cells) dots vs ``cells`` flat, so the crossover
-#: is cells ~ 25 at sup_probes=4; 64 adds margin for the index-build jobs.
-#: Below it "auto" stays flat WITHOUT a count job — the guard is what keeps
-#: the default small-cell kNN paths (IVF_CENTROIDS=16) zero-overhead.
+#: ~(1 + TWO_LEVEL_SUP_PROBES) * sqrt(cells) dots vs ``cells`` flat, so the
+#: crossover is cells ~ 25 at 4 super probes; 64 adds margin for the
+#: index-build jobs.
+#: An explicit cell count below it routes flat WITHOUT a count job — the
+#: guard is what keeps the default small-cell kNN paths (IVF_CENTROIDS=16)
+#: zero-overhead.
 TWO_LEVEL_MIN_CELLS = 64
+
+#: corpus size at which the IVF family switches from the exact flat
+#: argmax to the two-level coarse quantizer. Measured at sf10 (200k rows,
+#: 2048 cells): flat 328 s vs two-level 20 s with IDENTICAL >=0.95 pairs
+#: (SCALE.md round-3); below this the flat argmax is both exact and cheap.
+TWO_LEVEL_AUTO_MIN_ROWS = 100_000
 
 #: super-cells probed per row in two-level assignment (boundary vectors'
 #: true cell often lives in a runner-up super: measured 64% flat-agreement
 #: at probes=1 vs 95%+ at probes=4 — see two_level_assign).
 TWO_LEVEL_SUP_PROBES = 4
 
-#: the ARROW kernel's own "auto" crossover: BLAS makes the flat N x cells
-#: GEMM so cheap that two-level only pays above ~1k cells (measured on
-#: 200k x 64: 0.84x at 447 cells, 8.0x at 2048, 17.5x at 31.6k — SCALE.md
-#: round-9). The JVM paths keep the 64-cell gate; explicit
-#: assignment="two_level" bypasses this.
+#: the ARROW kernel's own two-level crossover: BLAS makes the flat N x
+#: cells GEMM so cheap that two-level only pays above ~1k cells (measured
+#: on 200k x 64: 0.84x at 447 cells, 8.0x at 2048, 17.5x at 31.6k —
+#: SCALE.md round-9). The JVM paths keep the 64-cell gate.
 ARROW_TWO_LEVEL_MIN_CELLS = 1024
 
-#: corpus size at which ``tier="auto"`` routes the IVF kNN entry points
-#: to the Arrow/BLAS kernel (``ivf_topk_arrow``). Measured (SCALE.md
+#: corpus size at which ``ivf_topk`` routes to the Arrow/BLAS kernel
+#: (``ivf_topk_arrow``). Measured (SCALE.md
 #: round 10, decorrelated 64-dim corpus, auto knobs): the JVM HOF tier
 #: scales at alpha 1.48 across the sf10 -> sf100e decade and reads
 #: 1374 s vs the Arrow kernel's 399 s at 2M rows (3.4x, widening with
@@ -334,9 +309,7 @@ ARROW_TWO_LEVEL_MIN_CELLS = 1024
 #: sub-second-to-seconds and the JVM tier keeps byte-identical
 #: oracle-pinned plans with zero driver-side collects; at or above it
 #: the Arrow tier's bounded collects (queries + centroid table, by
-#: contract) buy the measured 2-3x and the better exponent. Explicit
-#: ``tier="jvm"`` / ``tier="arrow"`` always bypass the route (e.g. for
-#: environments without Arrow).
+#: contract) buy the measured 2-3x and the better exponent.
 ARROW_TIER_MIN_ROWS = 100_000
 
 #: ``n_probes=None`` resolves to ``max(base, round(cells * FRACTION))``
@@ -371,15 +344,39 @@ def resolve_probes(n_probes: int | None, n_cells: int, base: int = IVF_PROBES,
     return max(base, min(by_fraction, IVF_PROBE_CAP)) + extra
 
 
-def resolve_tier(tier: str | None, n_rows: int | None) -> str | None:
-    """Resolve the execution-tier knob: ``"auto"`` routes to the Arrow
-    kernel at or above :data:`ARROW_TIER_MIN_ROWS` corpus rows and
-    stays on the JVM expression tier below (measured basis on the
-    constant); explicit ``"jvm"``/``"arrow"`` pass through. ``n_rows``
-    None (the zero-count fast path) resolves "auto" to "jvm"."""
-    if tier != "auto":
-        return tier
-    return "arrow" if n_rows is not None and n_rows >= ARROW_TIER_MIN_ROWS else "jvm"
+def _resolve_ivf(corpus: DataFrame, n_centroids: int | None, arrow: bool | None = False):
+    """The IVF family's one size rule (the SemDeDup auto rules), read
+    against the module constants at call time. ``arrow`` names the
+    tier: ``False`` the JVM expression tier, ``True`` the Arrow kernel,
+    ``None`` routes by corpus size (``ivf_topk``).
+
+    - An explicit ``n_centroids`` below :data:`TWO_LEVEL_MIN_CELLS` (the
+      registry's oracle-pinned IVF_CENTROIDS=16) is the small-corpus
+      contract: flat, exact full fit, the requested tier (``None`` ->
+      JVM), and NO count job — registry plans stay byte-identical.
+    - Otherwise ONE count job sizes everything: ``n_centroids=None`` ->
+      :func:`auto_centroids` (~sqrt(N); a FIXED cell count degenerates
+      in-cell scoring to N²/k as the corpus grows); the Arrow kernel at
+      or above :data:`ARROW_TIER_MIN_ROWS` rows; two-level coarse
+      quantization at or above :data:`TWO_LEVEL_AUTO_MIN_ROWS` rows and
+      the tier's cell gate (:data:`TWO_LEVEL_MIN_CELLS` JVM,
+      :data:`ARROW_TWO_LEVEL_MIN_CELLS` Arrow — the flat N x cells
+      argmax is the measured sf10 scale-killer); a Lloyd fit bounded to
+      ~max(PER_CELL * cells, MIN_SAMPLE) sampled vectors (without it
+      each Lloyd round is its own N x cells pass).
+
+    Returns ``(n_centroids, fit_fraction, two_level, arrow)``."""
+    if n_centroids is not None and n_centroids < TWO_LEVEL_MIN_CELLS:
+        return n_centroids, 1.0, False, bool(arrow)
+    n_rows = corpus.count()
+    if n_centroids is None:
+        n_centroids = auto_centroids(n_rows)
+    if arrow is None:
+        arrow = n_rows >= ARROW_TIER_MIN_ROWS
+    min_cells = ARROW_TWO_LEVEL_MIN_CELLS if arrow else TWO_LEVEL_MIN_CELLS
+    two_level = n_rows >= TWO_LEVEL_AUTO_MIN_ROWS and n_centroids >= min_cells
+    target = max(SEMANTIC_FIT_PER_CELL * n_centroids, SEMANTIC_FIT_MIN_SAMPLE)
+    return n_centroids, min(1.0, target / max(1, n_rows)), two_level, arrow
 
 
 def _centroid_array(cent: DataFrame) -> DataFrame:
@@ -808,7 +805,6 @@ def _ivf_assign(
     keep_vec: str,
     top: int,
     two_level: DataFrame | None = None,
-    sup_probes: int = 4,
 ) -> DataFrame:
     """Cell assignment against a broadcast 1-row centroid array: top=1 ->
     (id, unit vec, cent_id); top=n -> one exploded row per probed cell.
@@ -824,7 +820,7 @@ def _ivf_assign(
 
     ``two_level`` (a broadcast :func:`_two_level_index` row) swaps the
     flat N x cells ranking for the coarse-then-fine quantizer — ~(1 +
-    ``sup_probes``) * sqrt(cells) dots per row, the measured sf10 cure
+    TWO_LEVEL_SUP_PROBES) * sqrt(cells) dots per row, the sf10 cure
     for the flat argmax's N^1.5 wall (328 s flat vs 20 s two-level,
     identical pairs). Same output schema either way; the two-level
     forms are APPROXIMATE (documented in their helpers)."""
@@ -837,11 +833,11 @@ def _ivf_assign(
         scored = _with_unit(df.crossJoin(two_level), vecc, "_u")
         if top == 1:
             return (
-                scored.withColumn("_cell", _two_level_cells(F.col(vecc), sup_probes))
+                scored.withColumn("_cell", _two_level_cells(F.col(vecc)))
                 .select(F.col(idc), F.col("_u").alias(keep_vec), F.col("_cell").alias("cent_id"))
             )
         return (
-            scored.withColumn("_probes", _two_level_probe_ids(F.col(vecc), sup_probes, top))
+            scored.withColumn("_probes", _two_level_probe_ids(F.col(vecc), top))
             .select(
                 F.col(idc),
                 F.col("_u").alias(keep_vec),
@@ -878,10 +874,6 @@ def ivf_topk(
     n_centroids: int | None = IVF_CENTROIDS,
     n_probes: int | None = None,
     kmeans_iters: int = IVF_KMEANS_ITERS,
-    assignment: str = "auto",
-    sup_probes: int = TWO_LEVEL_SUP_PROBES,
-    fit_fraction: float | None = None,
-    tier: str = "auto",
 ) -> DataFrame:
     """IVF-style approximate top-k: the corpus is inverted into
     ``n_centroids`` cells (nearest-centroid assignment); a query probes its
@@ -900,60 +892,44 @@ def ivf_topk(
     DuckDB oracle (queries/similarity_queries.py::KNN_IVF_SQL) that
     replays the fixed-seed k-means and both assignments in SQL.
 
-    100x-scale knobs (all resolved by :func:`_resolve_ivf_knobs`, the
+    Scale routing is by corpus size alone (:func:`_resolve_ivf`, the
     SemDeDup auto rules): ``n_centroids=None`` scales cells ~sqrt(N) —
-    a fixed cell count makes in-cell pair work N²/k; ``assignment="auto"``
-    swaps BOTH flat N x cells rankings (corpus argmax AND query probe
-    sets) for the two-level coarse quantizer at >= 100k corpus rows and
-    >= 64 cells (measured sf10, 200k rows x 447 auto cells: flat corpus
-    assignment is the dominant term; two-level is ~(1+sup_probes) *
-    sqrt(cells) dots/row); ``fit_fraction=None`` sample-bounds the Lloyd
-    fit whenever the corpus was counted; ``n_probes=None`` holds the
-    probed fraction of cells constant (:func:`resolve_probes` — a
-    fixed count makes recall SHRINK as auto-cells grows ~sqrt(N));
-    ``tier="auto"`` routes the whole call to :func:`ivf_topk_arrow` at
-    or above :data:`ARROW_TIER_MIN_ROWS` corpus rows (round-10 soak:
-    the JVM HOF tier reads alpha 1.48 and 3.4x the Arrow kernel's wall
-    at 2M rows, widening with scale — results are bit-identical, so
-    only the physical strategy changes). The oracle-pinned default
-    (``n_centroids=16`` < TWO_LEVEL_MIN_CELLS) takes none of these
-    paths — no count job, flat exact JVM plan, byte-identical results.
+    a fixed cell count makes in-cell pair work N²/k; at >= 100k corpus
+    rows and >= 64 cells BOTH flat N x cells rankings (corpus argmax AND
+    query probe sets) become the two-level coarse quantizer (measured
+    sf10, 200k rows x 447 auto cells: flat corpus assignment is the
+    dominant term; two-level is ~(1 + TWO_LEVEL_SUP_PROBES) *
+    sqrt(cells) dots/row); the Lloyd fit is sample-bounded whenever the
+    corpus was counted; ``n_probes=None`` holds the probed fraction of cells constant
+    (:func:`resolve_probes` — a fixed count makes recall SHRINK as
+    auto-cells grows ~sqrt(N)); and at or above
+    :data:`ARROW_TIER_MIN_ROWS` corpus rows the whole call runs on the
+    :func:`ivf_topk_arrow` kernel (round-10 soak: the JVM HOF tier reads
+    alpha 1.48 and 3.4x the Arrow kernel's wall at 2M rows, widening
+    with scale — results are bit-identical, so only the physical
+    strategy changes). The oracle-pinned default (``n_centroids=16`` <
+    TWO_LEVEL_MIN_CELLS) takes none of these paths — no count job, flat
+    exact JVM plan, byte-identical results.
     """
-    requested_assignment = assignment
-    n_centroids, assignment, fit_fraction, tier = _resolve_ivf_knobs(
-        corpus, n_centroids, assignment, fit_fraction, tier
-    )
+    n_centroids, fit_fraction, two_level, arrow = _resolve_ivf(corpus, n_centroids, None)
     n_probes = resolve_probes(n_probes, n_centroids)
-    if tier == "arrow":
-        # Knobs are fully resolved — the Arrow twin re-resolves on
-        # explicit values with NO second count job. One asymmetry to
-        # replicate: the Arrow kernel's BLAS flat GEMM is so cheap that
-        # its own "auto" assignment keeps flat below
-        # ARROW_TWO_LEVEL_MIN_CELLS (1024) where the JVM gate is 64 —
-        # apply that gate here since the Arrow path will see an
-        # explicit (already-resolved) assignment string.
-        if (
-            requested_assignment == "auto"
-            and assignment == "two_level"
-            and n_centroids < ARROW_TWO_LEVEL_MIN_CELLS
-        ):
-            assignment = "flat"
-        return ivf_topk_arrow(
+    if arrow:
+        return _ivf_topk_arrow(
             queries, corpus, id_col, vec_col, k, n_centroids, n_probes,
-            kmeans_iters, fit_fraction, assignment, sup_probes,
+            kmeans_iters, fit_fraction, two_level,
         )
     cent = kmeans_centroids(
         corpus, id_col, vec_col, n_centroids, kmeans_iters, fit_fraction=fit_fraction
     )
     cent_arr = F.broadcast(_centroid_array(cent))
-    tl = F.broadcast(_two_level_index(cent)) if assignment == "two_level" else None
+    tl = F.broadcast(_two_level_index(cent)) if two_level else None
     c_assigned = _ivf_assign(
         _spread(corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"))),
-        cent_arr, "neighbor_id", "nv", "nv", 1, two_level=tl, sup_probes=sup_probes,
+        cent_arr, "neighbor_id", "nv", "nv", 1, two_level=tl,
     )
     q_assigned = _ivf_assign(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-        cent_arr, "query_id", "qv", "qv", n_probes, two_level=tl, sup_probes=sup_probes,
+        cent_arr, "query_id", "qv", "qv", n_probes, two_level=tl,
     )
     scored = (
         q_assigned.join(c_assigned, "cent_id")
@@ -981,90 +957,6 @@ def auto_centroids(n_rows: int) -> int:
     cluster count with corpus size). Measured: sf1 semantic dedup 47s with
     k=16 -> ~17s with auto k=141, identical verdicts."""
     return max(4, min(65536, int(round(n_rows**0.5))))
-
-
-#: corpus size at which ``assignment="auto"`` switches from the exact flat
-#: argmax to the two-level coarse quantizer. Measured at sf10 (200k rows,
-#: 2048 cells): flat 328 s vs two-level 20 s with IDENTICAL >=0.95 pairs
-#: (SCALE.md round-3); below this the flat argmax is both exact and cheap.
-TWO_LEVEL_AUTO_MIN_ROWS = 100_000
-
-
-def resolve_assignment(assignment: str, n_rows: int, n_cells: int | None = None) -> str:
-    """Resolve the ``assignment`` knob: ``"auto"`` picks the exact flat
-    argmax below :data:`TWO_LEVEL_AUTO_MIN_ROWS` rows and the two-level
-    coarse quantizer at or above it (the N x cells flat assignment is
-    the measured N^1.5 scale-killer — round-3 SCALE.md alpha 1.44);
-    explicit ``"flat"``/``"two_level"`` pass through unchanged. When
-    ``n_cells`` is known, "auto" additionally stays flat below
-    :data:`TWO_LEVEL_MIN_CELLS` cells — two-level costs MORE dots per
-    row than a small flat argmax."""
-    if assignment == "auto":
-        if n_cells is not None and n_cells < TWO_LEVEL_MIN_CELLS:
-            return "flat"
-        return "two_level" if n_rows >= TWO_LEVEL_AUTO_MIN_ROWS else "flat"
-    return assignment
-
-
-def _resolve_ivf_knobs(
-    corpus: DataFrame,
-    n_centroids: int | None,
-    assignment: str,
-    fit_fraction: float | None,
-    tier: str | None = None,
-) -> tuple:
-    """Shared knob resolution for the kNN index builders (``ivf_topk``,
-    ``ivf_topk_arrow``, ``ivfpq_topk``) — the same auto rules SemDeDup
-    uses (``semantic_dup_pairs``), factored so every IVF-family entry
-    point dispatches identically:
-
-    - ``n_centroids=None`` -> ``auto_centroids`` (~sqrt(N)): a FIXED cell
-      count degenerates in-cell scoring to N²/k as the corpus grows;
-    - ``assignment="auto"`` -> two-level coarse quantization at or above
-      :data:`TWO_LEVEL_AUTO_MIN_ROWS` rows AND :data:`TWO_LEVEL_MIN_CELLS`
-      cells (the flat N x cells argmax is the measured sf10 scale-killer:
-      328 s flat vs 20 s two-level, identical pairs);
-    - ``fit_fraction=None`` -> sample-bounded Lloyd fit
-      (max(PER_CELL * cells, MIN_SAMPLE) vectors) whenever the corpus was
-      counted anyway — without it each Lloyd round is its own N x cells
-      pass.
-
-    - ``tier="auto"`` (round-10 verdict #1) -> the Arrow/BLAS kernel at
-      or above :data:`ARROW_TIER_MIN_ROWS` corpus rows (measured: JVM
-      HOF alpha 1.48 and 3.4x slower than Arrow at 2M rows), the JVM
-      expression tier below; ``None`` skips tier resolution entirely
-      (callers that ARE a tier, e.g. ``ivf_topk_arrow``).
-
-    ZERO-OVERHEAD fast path: an explicit ``n_centroids`` below
-    :data:`TWO_LEVEL_MIN_CELLS` (the registry's oracle-pinned
-    IVF_CENTROIDS=16) resolves flat + JVM with NO count job and an
-    exact full fit — plans for every oracle-pinned query are
-    byte-identical to the pre-knob code. A small explicit index is the
-    small-corpus contract, so tier="auto" resolves "jvm" there without
-    counting; any caller that needs the count anyway (auto cells, auto
-    assignment, or tier="auto" with a large explicit index) shares ONE
-    count job for all four knobs. Returns (n_centroids, assignment,
-    fit_fraction, tier).
-    """
-    small_explicit = (
-        n_centroids is not None and n_centroids < TWO_LEVEL_MIN_CELLS
-    )
-    if assignment == "auto" and small_explicit:
-        assignment = "flat"
-    if tier == "auto" and small_explicit:
-        tier = "jvm"
-    if n_centroids is None or assignment == "auto" or tier == "auto":
-        n_rows = corpus.count()
-        if n_centroids is None:
-            n_centroids = auto_centroids(n_rows)
-        assignment = resolve_assignment(assignment, n_rows, n_centroids)
-        tier = resolve_tier(tier, n_rows)
-        if fit_fraction is None:
-            target = max(SEMANTIC_FIT_PER_CELL * n_centroids, SEMANTIC_FIT_MIN_SAMPLE)
-            fit_fraction = min(1.0, target / max(1, n_rows))
-    if fit_fraction is None:
-        fit_fraction = 1.0
-    return n_centroids, assignment, fit_fraction, tier
 
 
 #: auto fit-sample sizing: fit the Lloyd loop on ~max(PER_CELL * cells,
@@ -1163,9 +1055,6 @@ def semantic_dup_pairs(
     threshold: float = 0.95,
     n_centroids: int | None = None,
     kmeans_iters: int = IVF_KMEANS_ITERS,
-    fit_fraction: float | None = None,
-    assignment: str = "auto",
-    sup_probes: int = 4,
     pair_engine: str = "jvm",
 ) -> DataFrame:
     """SemDeDup-style candidate pairs: embed-space near-duplicates found
@@ -1179,47 +1068,45 @@ def semantic_dup_pairs(
     paper's own recipe, and the difference between N^1.5 and N²/k pair
     work at 100 TB. Pass an int to pin it.
 
-    ``assignment="auto"`` (default) resolves via :func:`resolve_assignment`:
-    exact flat argmax below :data:`TWO_LEVEL_AUTO_MIN_ROWS`, two-level
-    coarse quantizer above — the flat N x cells assignment is the
-    measured N^1.5 term (sf10: 328 s flat vs 20 s two-level, identical
-    pairs), so the 100x-scale caller must not get it by default.
+    The same count routes the rest (:func:`_resolve_ivf`): exact flat
+    argmax below :data:`TWO_LEVEL_AUTO_MIN_ROWS`, two-level coarse
+    quantizer above — the flat N x cells assignment is the measured
+    N^1.5 term (sf10: 328 s flat vs 20 s two-level, identical pairs) —
+    and a Lloyd fit bounded to a deterministic hash sample of
+    ~max(SEMANTIC_FIT_PER_CELL * cells, SEMANTIC_FIT_MIN_SAMPLE)
+    vectors: without it every Lloyd round is its own N x cells pass and
+    the fit, not the assignment, owns the N^1.5 asymptote (measured, see
+    the constants' comment). All registry SFs fall under the sample
+    floor and keep the exact full fit, so oracle hashes are unchanged.
+    An explicit ``n_centroids`` below TWO_LEVEL_MIN_CELLS skips the
+    count: flat assignment, full fit.
 
-    ``fit_fraction=None`` (default) bounds the Lloyd fit to a
-    deterministic hash sample of ~max(SEMANTIC_FIT_PER_CELL * cells,
-    SEMANTIC_FIT_MIN_SAMPLE) vectors — without it every Lloyd round is
-    its own N x cells pass and the fit, not the assignment, owns the
-    N^1.5 asymptote (measured, see the constants' comment). All registry
-    SFs fall under the sample floor and keep the exact full fit, so
-    oracle hashes are unchanged; pass an explicit fraction to pin.
+    ``pair_engine`` is ``"jvm"`` (the self-join) or ``"arrow"`` (the
+    per-cell GEMM kernel, :func:`_cell_pairs_arrow`); both emit the same
+    rows. Anything else raises ``ValueError``.
 
     Scale shape: centroid fit + assignment are the IVF machinery (1-row
     broadcast centroid array, narrow per-row argmax — the corpus is never
     shuffled to find its cell); the pair join is an equi-join on cell id,
     so candidate work is sum of squared CELL sizes, never corpus², and
     both unit-vector sides make the pair score one dot product."""
-    if n_centroids is None or assignment == "auto" or fit_fraction is None:
-        n_rows = corpus.count()
-        if n_centroids is None:
-            n_centroids = auto_centroids(n_rows)
-        assignment = resolve_assignment(assignment, n_rows, n_centroids)
-        if fit_fraction is None:
-            target = max(SEMANTIC_FIT_PER_CELL * n_centroids, SEMANTIC_FIT_MIN_SAMPLE)
-            fit_fraction = min(1.0, target / max(1, n_rows))
+    if pair_engine not in ("jvm", "arrow"):
+        raise ValueError(f"pair_engine must be 'jvm' or 'arrow', got {pair_engine!r}")
+    n_centroids, fit_fraction, two_level, _ = _resolve_ivf(corpus, n_centroids)
     cent = kmeans_centroids(
         corpus, id_col, vec_col, n_centroids, kmeans_iters, fit_fraction=fit_fraction
     )
-    if assignment == "two_level":
-        # coarse-then-fine argmax: ~(1 + sup_probes) * sqrt(cells) dots
-        # per row instead of cells — the N x cells assignment is the
-        # dominant term at scale (measured at sf10 / 2048 cells: flat
+    if two_level:
+        # coarse-then-fine argmax: ~(1 + TWO_LEVEL_SUP_PROBES) *
+        # sqrt(cells) dots per row instead of cells — the N x cells
+        # assignment is the dominant term at scale (measured at sf10 / 2048 cells: flat
         # 328 s vs two-level 20 s, IDENTICAL 570k >=0.95 pairs out the
         # other end — near-identical vectors make identical probe
         # decisions, so PAIR recall survives even where absolute cell
-        # agreement drops). The "auto" default lands here at or above
-        # TWO_LEVEL_AUTO_MIN_ROWS; the oracle-pinned registry query runs
-        # far below it, so its exact flat argmax is unchanged.
-        cells = two_level_assign(corpus, cent, id_col, vec_col, sup_probes=sup_probes)
+        # agreement drops). Corpora at or above TWO_LEVEL_AUTO_MIN_ROWS
+        # land here; the oracle-pinned registry query runs far below it,
+        # so its exact flat argmax is unchanged.
+        cells = two_level_assign(corpus, cent, id_col, vec_col)
         v = (
             _with_unit(
                 _spread(corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("raw"))),
@@ -1557,9 +1444,6 @@ def ivf_topk_arrow(
     n_centroids: int | None = IVF_CENTROIDS,
     n_probes: int | None = None,
     kmeans_iters: int = IVF_KMEANS_ITERS,
-    fit_fraction: float | None = None,
-    assignment: str = "auto",
-    sup_probes: int = TWO_LEVEL_SUP_PROBES,
 ) -> DataFrame:
     """``ivf_topk`` with the cell assignment + in-cell scoring fused into
     one Arrow-vectorized numpy kernel — same centroids (the JVM
@@ -1569,22 +1453,24 @@ def ivf_topk_arrow(
     narrow ``mapInPandas`` pass, so only <= q x (k+ties) candidate rows
     ever shuffle, for the final rank on query_id).
 
-    ``n_centroids=None`` / ``fit_fraction=None`` / ``assignment="auto"``
-    resolve exactly as in :func:`ivf_topk` (auto ~sqrt(N) cells,
-    sample-bounded Lloyd fit, two-level coarse quantization at >= 100k
-    rows AND >= 64 cells — registry defaults with IVF_CENTROIDS=16 stay
-    on the exact flat GEMM with NO count job, so oracle-pinned plans are
-    unchanged). The two-level form is TWO CHAINED GEMMs inside the same
-    ``mapInPandas`` pass: corpus batch x ~sqrt(cells) supers (coarse,
-    stable top-``sup_probes``), then batch x probed-super members (fine,
-    one GEMM per probed super group) — O(N^1.25 d) assignment FLOPs
+    Sizing resolves as in :func:`ivf_topk` (:func:`_resolve_ivf`: auto
+    ~sqrt(N) cells, sample-bounded Lloyd fit — registry defaults with
+    IVF_CENTROIDS=16 stay on the exact flat GEMM with NO count job, so
+    oracle-pinned plans are unchanged), except that two-level coarse
+    quantization waits for :data:`ARROW_TWO_LEVEL_MIN_CELLS`: the BLAS
+    flat GEMM moves the N x cells constant far below the interpreted-HOF
+    path the JVM's 64-cell gate was measured against. The two-level form
+    is TWO CHAINED GEMMs inside the same ``mapInPandas`` pass: corpus
+    batch x ~sqrt(cells) supers (coarse, stable top-TWO_LEVEL_SUP_PROBES),
+    then batch x probed-super members (fine, one GEMM per probed super
+    group) — O(N^1.25 d) assignment FLOPs
     instead of the flat GEMM's O(N^1.5 d) at auto cells ~ sqrt(N), the
     same asymptotic cure :func:`two_level_assign` gives the JVM paths.
     The super index is the driver-side numpy twin of
     :func:`_two_level_index` (:func:`_np_super_index`, centroid-table
     scale). Same contracts as the JVM two-level: approximate (a vector
     whose true cell lives outside every probed super misassigns; with
-    ``sup_probes`` >= supers the pool is ALL cells and the result is
+    TWO_LEVEL_SUP_PROBES >= supers the pool is ALL cells and the result is
     bit-identical to the flat kernel — asserted in tests), empty-pool
     rows fall back to the flat argmax. QUERY probes stay exact flat
     (queries are the bounded side; q x cells dots driver-side is never
@@ -1614,26 +1500,30 @@ def ivf_topk_arrow(
     widens with corpus size while the fit stays bounded (sampled
     dictionary, see ``kmeans_centroids``).
     """
+    n_centroids, fit_fraction, two_level, _ = _resolve_ivf(corpus, n_centroids, True)
+    return _ivf_topk_arrow(
+        queries, corpus, id_col, vec_col, k, n_centroids,
+        resolve_probes(n_probes, n_centroids), kmeans_iters, fit_fraction, two_level,
+    )
+
+
+def _ivf_topk_arrow(
+    queries: DataFrame,
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    n_centroids: int,
+    n_probes: int,
+    kmeans_iters: int,
+    fit_fraction: float,
+    two_level: bool,
+) -> DataFrame:
+    """The :func:`ivf_topk_arrow` kernel over already-resolved sizes —
+    shared with :func:`ivf_topk`'s Arrow route so the corpus is counted
+    once per call."""
     import numpy as np
 
-    requested = assignment
-    n_centroids, assignment, fit_fraction, _ = _resolve_ivf_knobs(
-        corpus, n_centroids, assignment, fit_fraction
-    )
-    n_probes = resolve_probes(n_probes, n_centroids)
-    # The BLAS flat GEMM moves the N x cells constant far below the
-    # interpreted-HOF path the JVM's 64-cell gate was measured against,
-    # so the Arrow crossover sits higher: measured on 200k x 64 (idle
-    # box), two-level assignment is 0.84x at 447 cells but 8.0x at 2048
-    # and 17.5x at 31.6k (SCALE.md round-9). "auto" therefore stays on
-    # the exact flat kernel below _ARROW_TWO_LEVEL_MIN_CELLS; an
-    # explicit assignment="two_level" is honored at any cell count.
-    if (
-        requested == "auto"
-        and assignment == "two_level"
-        and n_centroids < ARROW_TWO_LEVEL_MIN_CELLS
-    ):
-        assignment = "flat"
     cent_rows = kmeans_centroids(
         corpus, id_col, vec_col, n_centroids, kmeans_iters, fit_fraction=fit_fraction
     ).collect()
@@ -1682,11 +1572,11 @@ def ivf_topk_arrow(
     )
     slack = 2e-6  # cosine selection: 6dp tie + GEMM reassociation error
 
-    # two-level coarse quantizer (resolved above): centroid-table-scale
-    # super index, built once driver-side and captured by the kernel
-    if assignment == "two_level":
+    # two-level coarse quantizer: centroid-table-scale super index,
+    # built once driver-side and captured by the kernel
+    if two_level:
         sm, sup_members = _np_super_index(cm)
-        n_sup = min(sup_probes, sm.shape[0])
+        n_sup = min(TWO_LEVEL_SUP_PROBES, sm.shape[0])
     else:
         sm = sup_members = None
         n_sup = 0
@@ -2311,9 +2201,6 @@ def ivfpq_topk(
     m: int = PQ_SUBSPACES,
     n_codes: int = PQ_CODES,
     shortlist_factor: int = PQ_SHORTLIST_FACTOR,
-    assignment: str = "auto",
-    sup_probes: int = TWO_LEVEL_SUP_PROBES,
-    fit_fraction: float | None = None,
     residual: bool = False,
 ) -> DataFrame:
     """IVF-PQ: the full FAISS-style ANN deployment shape (Jégou et al.
@@ -2335,9 +2222,8 @@ def ivfpq_topk(
     cent_id against broadcast per-query LUTs; the exact re-rank touches
     raw vectors for shortlist rows only. Deterministic end to end.
 
-    ``n_centroids=None`` / ``assignment="auto"`` / ``fit_fraction=None``
-    resolve via :func:`_resolve_ivf_knobs` exactly as in
-    :func:`ivf_topk` — auto ~sqrt(N) cells, two-level coarse
+    Sizing resolves via :func:`_resolve_ivf` exactly as in the JVM tier
+    of :func:`ivf_topk` — auto ~sqrt(N) cells, two-level coarse
     quantization for both assignment sides at >= 100k rows and >= 64
     cells, sample-bounded Lloyd fit. The oracle-pinned default
     (IVF_CENTROIDS=16) stays on the exact flat path with no count job.
@@ -2362,15 +2248,13 @@ def ivfpq_topk(
     oracle-pinned registry index (16 cells) this is exactly the old
     IVF_PROBES + 2 default.
     """
-    n_centroids, assignment, fit_fraction, _ = _resolve_ivf_knobs(
-        corpus, n_centroids, assignment, fit_fraction
-    )
+    n_centroids, fit_fraction, two_level, _ = _resolve_ivf(corpus, n_centroids)
     n_probes = resolve_probes(n_probes, n_centroids, extra=2)
     cent = kmeans_centroids(
         corpus, id_col, vec_col, n_centroids, IVF_KMEANS_ITERS, fit_fraction=fit_fraction
     )
     cent_arr = F.broadcast(_centroid_array(cent))
-    tl = F.broadcast(_two_level_index(cent)) if assignment == "two_level" else None
+    tl = F.broadcast(_two_level_index(cent)) if two_level else None
     if residual:
         # assignment keeps the UNIT vector; residual = unit - centroid.
         # PERSISTED: the residual frame (one assignment pass + a
@@ -2382,7 +2266,7 @@ def ivfpq_topk(
         res = (
             _ivf_assign(
                 _spread(corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"))),
-                cent_arr, "nid", "nv", "nu", 1, two_level=tl, sup_probes=sup_probes,
+                cent_arr, "nid", "nv", "nu", 1, two_level=tl,
             )
             .filter(F.col("nu").isNotNull())
             .join(F.broadcast(cent), "cent_id")
@@ -2402,7 +2286,7 @@ def ivfpq_topk(
     else:
         c_cells = _ivf_assign(
             _spread(corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"))),
-            cent_arr, "nid", "nv", "nv", 1, two_level=tl, sup_probes=sup_probes,
+            cent_arr, "nid", "nv", "nv", 1, two_level=tl,
         ).select("nid", "cent_id")
         books = pq_codebooks(corpus, id_col, vec_col, m, n_codes, fit_fraction=fit_fraction)
         codes = pq_encode(corpus, books, id_col, vec_col, m).select(
@@ -2413,7 +2297,7 @@ def ivfpq_topk(
 
     q_probes = _ivf_assign(
         queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")),
-        cent_arr, "qid", "qv", "qv", n_probes, two_level=tl, sup_probes=sup_probes,
+        cent_arr, "qid", "qv", "qv", n_probes, two_level=tl,
     ).select("qid", "cent_id")
     if residual:
         # exact coarse term per (query, probed cell): dot(RAW q, unit
@@ -2718,17 +2602,18 @@ def _scored_structs(arr: Column, vec: Column, id_field: str) -> Column:
     )
 
 
-def _pooled_members(vec: Column, sup_probes: int) -> Column:
-    """Union of the top-``sup_probes`` super-cells' member centroids for
-    ``vec``, against broadcast ``supers`` (array<struct<sup_id, sv>>) +
-    ``members`` (map<sup_id, array<struct<cent_id, cv>>>) — the shared
+def _pooled_members(vec: Column) -> Column:
+    """Union of the top-:data:`TWO_LEVEL_SUP_PROBES` super-cells' member
+    centroids for ``vec``, against broadcast ``supers``
+    (array<struct<sup_id, sv>>) + ``members`` (map<sup_id,
+    array<struct<cent_id, cv>>>) — the shared
     coarse stage of both two-level forms (argmax assignment and top-n
     probe sets). Single-probe misassigns boundary vectors whose true
     cell lives in the runner-up super — measured 64% flat-agreement at
     probes=1 vs 95%+ at probes=4."""
+    ranked = F.reverse(F.array_sort(_scored_structs(F.col("supers"), vec, "sup_id")))
     top_sups = F.transform(
-        F.slice(F.reverse(F.array_sort(_scored_structs(F.col("supers"), vec, "sup_id"))), 1, sup_probes),
-        lambda s: s.getField("sup_id"),
+        F.slice(ranked, 1, TWO_LEVEL_SUP_PROBES), lambda s: s.getField("sup_id")
     )
     return F.flatten(
         F.transform(top_sups, lambda sid: F.coalesce(
@@ -2738,27 +2623,27 @@ def _pooled_members(vec: Column, sup_probes: int) -> Column:
     )
 
 
-def _two_level_cells(vec: Column, sup_probes: int) -> Column:
+def _two_level_cells(vec: Column) -> Column:
     """Per-row two-level nearest-cell id: rank the super-centroids, then
-    argmax over the UNION of the top-``sup_probes`` supers' member
+    argmax over the UNION of the top-TWO_LEVEL_SUP_PROBES supers' member
     centroids (:func:`_pooled_members`). Both levels use the
     unit-centroid dot ranking of :func:`_scored_cents`. If every probed
     super lost all members (a super can end empty after the final Lloyd
     mean update), falls back to the flat argmax over ALL members — a
     dropped vector would silently lose its duplicates, which is worse
     than paying the full scan for the rare orphan row."""
-    pooled = _pooled_members(vec, sup_probes)
+    pooled = _pooled_members(vec)
     probed = F.array_max(_scored_structs(pooled, vec, "cent_id")).getField("cent_id")
     all_members = F.flatten(F.map_values(F.col("members")))
     fallback = F.array_max(_scored_structs(all_members, vec, "cent_id")).getField("cent_id")
     return F.when(F.size(pooled) > 0, probed).otherwise(fallback)
 
 
-def _two_level_probe_ids(vec: Column, sup_probes: int, n_probes: int) -> Column:
+def _two_level_probe_ids(vec: Column, n_probes: int) -> Column:
     """Per-row two-level top-``n_probes`` cell ids (the QUERY side of a
-    two-level IVF): rank supers, pool the top-``sup_probes`` supers'
-    members, take the ``n_probes`` highest-dot members — ~(1 +
-    sup_probes) * sqrt(cells) dots per row instead of ``cells``, same
+    two-level IVF): rank supers, pool the top-TWO_LEVEL_SUP_PROBES
+    supers' members, take the ``n_probes`` highest-dot members — ~(1 +
+    TWO_LEVEL_SUP_PROBES) * sqrt(cells) dots per row instead of ``cells``, same
     asymptotic cut as :func:`_two_level_cells`. APPROXIMATE relative to
     the flat top-n: a probe cell ranked n-th overall but living outside
     every probed super is missed (boundary effect, same contract as the
@@ -2766,7 +2651,7 @@ def _two_level_probe_ids(vec: Column, sup_probes: int, n_probes: int) -> Column:
     downstream). A pool smaller than ``n_probes`` yields fewer probes;
     an EMPTY pool (all probed supers emptied by Lloyd) falls back to
     the flat top-n over all members."""
-    pooled = _pooled_members(vec, sup_probes)
+    pooled = _pooled_members(vec)
     top_n = lambda arr: F.transform(  # noqa: E731 — local ranking shorthand
         F.slice(F.reverse(F.array_sort(_scored_structs(arr, vec, "cent_id"))), 1, n_probes),
         lambda s: s.getField("cent_id"),
@@ -2826,7 +2711,6 @@ def two_level_assign(
     id_col: str,
     vec_col: str,
     n_super: int | None = None,
-    sup_probes: int = TWO_LEVEL_SUP_PROBES,
 ) -> DataFrame:
     """Two-level (coarse-then-fine) nearest-centroid assignment — the
     IVF-of-IVF trick that breaks the N x cells argmax wall: cluster the
@@ -2836,11 +2720,11 @@ def two_level_assign(
     members — ~2*sqrt(cells) dot products per row instead of cells.
 
     APPROXIMATE: a vector whose true nearest centroid lives outside all
-    ``sup_probes`` probed super-cells is misassigned (boundary effect —
+    :data:`TWO_LEVEL_SUP_PROBES` probed super-cells is misassigned (boundary effect —
     agreement with flat assignment measured in tests and SCALE.md). The
     flat argmax stays the default everywhere an oracle pins exact
-    output. Per-row cost: n_super + sup_probes * avg_members ~
-    (1 + sup_probes) * sqrt(cells) dots instead of cells.
+    output. Per-row cost: n_super + TWO_LEVEL_SUP_PROBES * avg_members ~
+    (1 + TWO_LEVEL_SUP_PROBES) * sqrt(cells) dots instead of cells.
     Returns (id, cell_id).
     """
     index_row = _two_level_index(cent, n_super)
@@ -2849,6 +2733,6 @@ def two_level_assign(
         .crossJoin(F.broadcast(index_row))
         .select(
             F.col("_id").alias(id_col),
-            _two_level_cells(F.col("_v"), sup_probes).alias("cell_id"),
+            _two_level_cells(F.col("_v")).alias("cell_id"),
         )
     )

@@ -395,11 +395,8 @@ def q_activity_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     centered = F.transform(vec, lambda x: x - F.col("__m__"))
     v = (
         prof.withColumn("__m__", mean.cast("double"))
-        .select(
-            "user_id",
-            centered.alias("v"),
-            sim.sign_bucket(centered, PROFILE_BUCKET_BITS).alias("bucket"),
-        )
+        .select("user_id", centered.alias("v"))
+        .withColumn("bucket", sim.sign_bucket("v", PROFILE_BUCKET_BITS))
         .repartition(F.col("bucket"))
     )
     a, b = v.alias("a"), v.alias("b")

@@ -940,9 +940,7 @@ def knn_opq_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         orig.join(rot, "vec_id")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.round(
-                F.max(F.abs(sim.norm(F.col("rv")) - sim.norm(F.col("ov")))), 6
-            ).alias("norm_defect"),
+            F.round(F.max(F.abs(sim.norm("rv") - sim.norm("ov"))), 6).alias("norm_defect"),
         )
         .select(
             F.lit(int(R.shape[0])).cast("int").alias("dims"),

@@ -52,7 +52,7 @@ def get_spark(
         if env_sp:
             shuffle_partitions = int(env_sp)
         else:
-            shuffle_partitions = os.cpu_count() or 32 if cpus == "*" else int(cpus)
+            shuffle_partitions = cores
     # Scale-adaptive shuffle sizing ON BY DEFAULT (round-4 finding: the
     # per-core default OOMs an 8g heap at sf100 — 32 partitions x 19M rows
     # per sort task — and spill-drags the contamination join 2.2x; see

@@ -20,6 +20,26 @@ def _recall(exact, approx):
     return hits / sum(len(exact[q]) for q in exact)
 
 
+def _force_two_level(m):
+    """Route every IVF entry point onto two-level assignment at the
+    fixture's size: the routing constants are read at call time."""
+    m.setattr(sim, "TWO_LEVEL_AUTO_MIN_ROWS", 0)
+    m.setattr(sim, "TWO_LEVEL_MIN_CELLS", 0)
+    m.setattr(sim, "ARROW_TWO_LEVEL_MIN_CELLS", 0)
+
+
+class _Rows:
+    """Corpus stand-in for the routing rules: ``count()`` returns a
+    fixed size, or fails when the rule must not count at all."""
+
+    def __init__(self, n_rows=None):
+        self.n_rows = n_rows
+
+    def count(self):
+        assert self.n_rows is not None, "the zero-count fast path counted"
+        return self.n_rows
+
+
 def test_ivf_recall_vs_brute_force(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(emb.vec_id % 50 == 0)
@@ -244,39 +264,33 @@ def test_arrow_ivf_equals_jvm(spark, sf_dir):
     assert len(a) > 0
 
 
-def test_arrow_ivf_two_level_exhaustive_probe_is_bit_parity(spark, sf_dir):
+def test_arrow_ivf_two_level_exhaustive_probe_is_bit_parity(spark, sf_dir, monkeypatch):
     """Round-8 verdict #2: the Arrow kernel dispatches the two-level
-    coarse quantizer. With ``sup_probes`` >= the super count the pooled
+    coarse quantizer. With TWO_LEVEL_SUP_PROBES >= the super count the pooled
     members are ALL cells, so the chained-GEMM form must be
     BIT-IDENTICAL to the flat kernel (same slack selection, fold-order
     rescore, and lexsort tie-break, just grouped by super)."""
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(emb.vec_id % 50 == 0)
-    flat = sim.ivf_topk_arrow(
-        queries, emb, k=5, n_centroids=16, assignment="flat"
-    ).collect()
-    two = sim.ivf_topk_arrow(
-        queries, emb, k=5, n_centroids=16, assignment="two_level",
-        sup_probes=10_000,
-    ).collect()
+    flat = sim.ivf_topk_arrow(queries, emb, k=5, n_centroids=16).collect()
+    with monkeypatch.context() as m:
+        _force_two_level(m)
+        m.setattr(sim, "TWO_LEVEL_SUP_PROBES", 10_000)
+        two = sim.ivf_topk_arrow(queries, emb, k=5, n_centroids=16).collect()
     assert sorted(map(tuple, flat)) == sorted(map(tuple, two))
     assert len(flat) > 0
 
 
-def test_arrow_ivf_two_level_default_probes_agreement(spark, sf_dir):
-    """Default ``sup_probes`` two-level assignment is approximate by
+def test_arrow_ivf_two_level_default_probes_agreement(spark, sf_dir, monkeypatch):
+    """Default TWO_LEVEL_SUP_PROBES two-level assignment is approximate by
     contract — top-k agreement with the flat kernel must stay high
     (the JVM two-level's measured 95%+ flat agreement at probes=4)."""
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(emb.vec_id % 50 == 0)
-    flat = _topk_sets(
-        sim.ivf_topk_arrow(queries, emb, k=5, n_centroids=64, assignment="flat")
-    )
-    two = _topk_sets(
-        sim.ivf_topk_arrow(
-            queries, emb, k=5, n_centroids=64, assignment="two_level"
-        )
-    )
+    flat = _topk_sets(sim.ivf_topk_arrow(queries, emb, k=5, n_centroids=64))
+    with monkeypatch.context() as m:
+        _force_two_level(m)
+        two = _topk_sets(sim.ivf_topk_arrow(queries, emb, k=5, n_centroids=64))
     hits = sum(len(flat[q] & two.get(q, set())) for q in flat)
     total = sum(len(flat[q]) for q in flat)
     assert total > 0 and hits >= 0.9 * total
@@ -287,10 +301,8 @@ def test_arrow_ivf_registry_default_stays_flat(spark, sf_dir):
     TWO_LEVEL_MIN_CELLS) must resolve flat with no count job — the
     knn_ivf_arrow hashes cannot move."""
     emb = load(spark, sf_dir, "embeddings")
-    _, assignment, _, tier = sim._resolve_ivf_knobs(
-        emb, sim.IVF_CENTROIDS, "auto", None, tier="auto"
-    )
-    assert assignment == "flat" and tier == "jvm"
+    _, _, two_level, arrow = sim._resolve_ivf(emb, sim.IVF_CENTROIDS, None)
+    assert not two_level and not arrow
 
 
 def test_arrow_ivf_plan_shape(spark, sf_dir):
@@ -439,15 +451,14 @@ def test_pq_codebooks_sampled_fit(spark, sf_dir):
 
 
 def test_ivfpq_residual_composes_with_auto_knobs(spark, sf_dir):
-    """Round-8 verdict #6: residual=True must compose with
-    assignment="auto" / auto cells / sampled fits — runs end-to-end and
-    keeps useful recall on the registry fixture."""
+    """Round-8 verdict #6: residual=True must compose with the size
+    routing (auto cells / sampled fits) — runs end-to-end and keeps
+    useful recall on the registry fixture."""
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(emb.vec_id % 50 == 0)
     exact = _topk_sets(sim.brute_force_topk(queries, emb, k=5))
     approx = _topk_sets(
-        sim.ivfpq_topk(queries, emb, k=5, n_centroids=None,
-                       assignment="auto", residual=True)
+        sim.ivfpq_topk(queries, emb, k=5, n_centroids=None, residual=True)
     )
     assert _recall(exact, approx) >= 0.5
 
@@ -495,7 +506,7 @@ def test_ivfpq_topk_shape_and_recall(spark, sf_dir):
     assert hit.r >= 0.5
 
 
-def test_two_level_assignment_preserves_near_dup_pairs(spark, sf_dir):
+def test_two_level_assignment_preserves_near_dup_pairs(spark, sf_dir, monkeypatch):
     """The scale contract of the coarse-then-fine argmax: a >=0.95-cosine
     pair makes (near-)identical probe decisions, so the PAIR set from
     two-level cells matches the flat exact argmax even where absolute
@@ -510,12 +521,12 @@ def test_two_level_assignment_preserves_near_dup_pairs(spark, sf_dir):
         (r.id_a, r.id_b)
         for r in sim.semantic_dup_pairs(emb, n_centroids=32, threshold=0.9).collect()
     }
-    two = {
-        (r.id_a, r.id_b)
-        for r in sim.semantic_dup_pairs(
-            emb, n_centroids=32, threshold=0.9, assignment="two_level"
-        ).collect()
-    }
+    with monkeypatch.context() as m:
+        _force_two_level(m)
+        two = {
+            (r.id_a, r.id_b)
+            for r in sim.semantic_dup_pairs(emb, n_centroids=32, threshold=0.9).collect()
+        }
     # identical pair sets on the test corpus (or at worst a tiny,
     # boundary-only delta — assert strong containment both ways)
     assert len(two) >= 0.95 * len(flat) if flat else two == flat
@@ -529,17 +540,16 @@ def test_auto_assignment_resolution():
     shipped opt-in, leaving the N^1.5 flat path as the 100x default)."""
     from monster_etl_spark.operators import similarity as sim
 
+    def two_level(n_rows, n_cells=None):
+        return sim._resolve_ivf(_Rows(n_rows), n_cells)[2]
+
     t = sim.TWO_LEVEL_AUTO_MIN_ROWS
-    assert sim.resolve_assignment("auto", t - 1) == "flat"
-    assert sim.resolve_assignment("auto", t) == "two_level"
-    assert sim.resolve_assignment("flat", 10 * t) == "flat"
-    assert sim.resolve_assignment("two_level", 1) == "two_level"
+    assert not two_level(t - 1)
+    assert two_level(t)
     # cell guard: two-level over a tiny cell table costs MORE dots per
     # row than the flat argmax it replaces — "auto" must stay flat there
-    assert sim.resolve_assignment("auto", t, sim.TWO_LEVEL_MIN_CELLS - 1) == "flat"
-    assert sim.resolve_assignment("auto", t, sim.TWO_LEVEL_MIN_CELLS) == "two_level"
-    # explicit "two_level" is never second-guessed by the guard
-    assert sim.resolve_assignment("two_level", 1, 2) == "two_level"
+    assert not two_level(t, sim.TWO_LEVEL_MIN_CELLS - 1)
+    assert two_level(t, sim.TWO_LEVEL_MIN_CELLS)
 
 
 def test_auto_assignment_two_level_path_matches_flat(spark, sf_dir, monkeypatch):
@@ -550,17 +560,16 @@ def test_auto_assignment_two_level_path_matches_flat(spark, sf_dir, monkeypatch)
     from monster_etl_spark.queries import load
 
     emb = load(spark, sf_dir, "embeddings")
-    monkeypatch.setattr(sim, "TWO_LEVEL_AUTO_MIN_ROWS", 1)
-    monkeypatch.setattr(sim, "TWO_LEVEL_MIN_CELLS", 1)  # 32 cells < default guard
-    auto = {
-        (r.id_a, r.id_b)
-        for r in sim.semantic_dup_pairs(emb, n_centroids=32, threshold=0.9).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(sim, "TWO_LEVEL_AUTO_MIN_ROWS", 1)
+        m.setattr(sim, "TWO_LEVEL_MIN_CELLS", 1)  # 32 cells < default guard
+        auto = {
+            (r.id_a, r.id_b)
+            for r in sim.semantic_dup_pairs(emb, n_centroids=32, threshold=0.9).collect()
+        }
     flat = {
         (r.id_a, r.id_b)
-        for r in sim.semantic_dup_pairs(
-            emb, n_centroids=32, threshold=0.9, assignment="flat"
-        ).collect()
+        for r in sim.semantic_dup_pairs(emb, n_centroids=32, threshold=0.9).collect()
     }
     assert len(auto & flat) >= 0.95 * len(auto | flat) if (auto or flat) else True
 
@@ -678,10 +687,10 @@ def test_semantic_dedup_verdicts_arrow_matches_default(spark):
     assert out[200] == (2, False) and out[201] == (2, False) and out[2] == (2, True)
 
 
-def test_ivf_two_level_recall_and_flat_agreement(spark, sf_dir):
+def test_ivf_two_level_recall_and_flat_agreement(spark, sf_dir, monkeypatch):
     """Round-7 verdict #1: the kNN IVF paths must dispatch to the
-    two-level coarse quantizer at scale. Forced two-level (explicit
-    assignment, cells large enough for a real super level) must keep
+    two-level coarse quantizer at scale. Forced two-level (routing
+    constants lowered, cells large enough for a real super level) must keep
     brute-force recall AND substantially agree with the flat exact
     argmax — near-identical vectors make near-identical probe
     decisions, so top-k survival is the contract, not absolute cell
@@ -689,10 +698,10 @@ def test_ivf_two_level_recall_and_flat_agreement(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(emb.vec_id % 50 == 0)
     exact = _topk_sets(sim.brute_force_topk(queries, emb, k=5))
-    flat = _topk_sets(sim.ivf_topk(queries, emb, k=5, n_centroids=32, assignment="flat"))
-    two = _topk_sets(
-        sim.ivf_topk(queries, emb, k=5, n_centroids=32, assignment="two_level")
-    )
+    flat = _topk_sets(sim.ivf_topk(queries, emb, k=5, n_centroids=32))
+    with monkeypatch.context() as m:
+        _force_two_level(m)
+        two = _topk_sets(sim.ivf_topk(queries, emb, k=5, n_centroids=32))
     assert two.keys() == exact.keys()
     r_two = _recall(exact, two)
     r_flat = _recall(exact, flat)
@@ -700,16 +709,18 @@ def test_ivf_two_level_recall_and_flat_agreement(spark, sf_dir):
     assert r_two >= r_flat - 0.2, f"two-level lost too much vs flat: {r_flat} -> {r_two}"
 
 
-def test_ivfpq_two_level_shape_and_recall(spark, sf_dir):
+def test_ivfpq_two_level_shape_and_recall(spark, sf_dir, monkeypatch):
     """Same dispatch contract for the IVF-PQ composition: forced
     two-level keeps the (query_id, neighbor_id, cosine_sim, rank)
     shape, the <= k rows-per-query bound, and usable recall."""
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(emb.vec_id % 50 == 0)
     exact = _topk_sets(sim.brute_force_topk(queries, emb, k=5))
-    res = sim.ivfpq_topk(queries, emb, k=5, n_centroids=32, assignment="two_level")
-    assert res.columns == ["query_id", "neighbor_id", "cosine_sim", "rank"]
-    rows = res.collect()
+    with monkeypatch.context() as m:
+        _force_two_level(m)
+        res = sim.ivfpq_topk(queries, emb, k=5, n_centroids=32)
+        assert res.columns == ["query_id", "neighbor_id", "cosine_sim", "rank"]
+        rows = res.collect()
     per_q = {}
     for r in rows:
         per_q.setdefault(r.query_id, []).append(r.rank)
@@ -720,50 +731,39 @@ def test_ivfpq_two_level_shape_and_recall(spark, sf_dir):
 
 
 def test_resolve_ivf_knobs(spark):
-    """The knob resolver's zero-overhead fast path and auto rules: an
+    """The size resolver's zero-overhead fast path and auto rules: an
     explicit small cell count must resolve WITHOUT a count job (flat,
     full fit); n_centroids=None counts and scales cells ~sqrt(N); the
-    auto assignment threshold dispatches on corpus rows AND cells."""
+    two-level threshold dispatches on corpus rows AND cells."""
     df = spark.createDataFrame(
         [(i, [float(i), 1.0]) for i in range(100)], "vec_id: long, embedding: array<double>"
     )
     # fast path: no count needed -> flat + exact fit + JVM tier, small
-    # explicit cells (the small-corpus contract resolves tier="auto"
-    # WITHOUT a count job — registry plans byte-identical)
-    n, a, f, t = sim._resolve_ivf_knobs(df, sim.IVF_CENTROIDS, "auto", None, "auto")
-    assert (n, a, f, t) == (sim.IVF_CENTROIDS, "flat", 1.0, "jvm")
+    # explicit cells (the small-corpus contract routes WITHOUT a count
+    # job — registry plans byte-identical)
+    assert sim._resolve_ivf(df, sim.IVF_CENTROIDS, None) == (sim.IVF_CENTROIDS, 1.0, False, False)
     # auto cells: ~sqrt(100) = 10, still flat (tiny corpus), sampled-fit
     # target far above 100 rows -> full fit, tiny corpus -> JVM tier
-    n, a, f, t = sim._resolve_ivf_knobs(df, None, "auto", None, "auto")
-    assert n == sim.auto_centroids(100) and a == "flat" and f == 1.0
-    assert t == "jvm"
-    # explicit two_level passes through even on the fast path
-    _, a, _, _ = sim._resolve_ivf_knobs(df, sim.IVF_CENTROIDS, "two_level", None)
-    assert a == "two_level"
-    # explicit fit_fraction is never overridden
-    _, _, f, _ = sim._resolve_ivf_knobs(df, None, "auto", 0.5)
-    assert f == 0.5
-    # explicit tier passes through; tier=None (a caller that IS a tier)
-    # stays None
-    assert sim._resolve_ivf_knobs(df, None, "auto", None, "arrow")[3] == "arrow"
-    assert sim._resolve_ivf_knobs(df, None, "auto", None)[3] is None
+    n, f, two_level, arrow = sim._resolve_ivf(df, None, None)
+    assert n == sim.auto_centroids(100) and not two_level and f == 1.0
+    assert not arrow
 
 
 def test_resolve_tier_and_probes_rules():
     """Pin the round-11 routing crossover and the constant-probed-
-    fraction rule (round-10 verdict #1/#2): tier='auto' routes to the
+    fraction rule (round-10 verdict #1/#2): ivf_topk routes to the
     Arrow kernel at ARROW_TIER_MIN_ROWS (the measured sf10->sf100e
     decade: JVM alpha 1.48, 3.4x Arrow's wall at 2M rows) and
     n_probes=None holds probed fraction ~IVF_PROBE_FRACTION of cells,
     never below the registry-pinned base."""
     assert sim.ARROW_TIER_MIN_ROWS == 100_000
+    def arrow(corpus, n_cells=None):
+        return sim._resolve_ivf(corpus, n_cells, None)[3]
+
     t = sim.ARROW_TIER_MIN_ROWS
-    assert sim.resolve_tier("auto", t - 1) == "jvm"
-    assert sim.resolve_tier("auto", t) == "arrow"
-    assert sim.resolve_tier("auto", None) == "jvm"  # zero-count fast path
-    assert sim.resolve_tier("jvm", 10 * t) == "jvm"
-    assert sim.resolve_tier("arrow", 1) == "arrow"
-    assert sim.resolve_tier(None, 10 * t) is None
+    assert not arrow(_Rows(t - 1))
+    assert arrow(_Rows(t))
+    assert not arrow(_Rows(), sim.IVF_CENTROIDS)  # zero-count fast path
     # probes: registry identities (cells=16 -> the pre-knob defaults)
     assert sim.resolve_probes(None, sim.IVF_CENTROIDS) == sim.IVF_PROBES
     assert sim.resolve_probes(None, sim.IVF_CENTROIDS, extra=2) == sim.IVF_PROBES + 2
@@ -778,27 +778,27 @@ def test_resolve_tier_and_probes_rules():
 
 
 def test_ivf_tier_auto_routes_to_arrow(spark, sf_dir, monkeypatch):
-    """Above the (monkeypatch-lowered) crossover, ivf_topk with default
-    tier='auto' must dispatch the WHOLE call to ivf_topk_arrow — and the
-    routed result must equal the JVM tier's bit-for-bit."""
+    """Above the (monkeypatch-lowered) crossover, ivf_topk must dispatch
+    the WHOLE call to the ivf_topk_arrow kernel — and the routed result
+    must equal the JVM tier's bit-for-bit."""
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(emb.vec_id % 50 == 0)
     monkeypatch.setattr(sim, "ARROW_TIER_MIN_ROWS", 1)
     called = {}
-    real = sim.ivf_topk_arrow
+    real = sim._ivf_topk_arrow
 
     def spy(*a, **kw):
         called["hit"] = True
         return real(*a, **kw)
 
-    monkeypatch.setattr(sim, "ivf_topk_arrow", spy)
+    monkeypatch.setattr(sim, "_ivf_topk_arrow", spy)
     # n_centroids=None: the explicit-small-index fast path is the
-    # small-corpus CONTRACT and never routes; auto knobs do
+    # small-corpus CONTRACT and never routes; auto sizing does
     routed = sim.ivf_topk(queries, emb, k=5, n_centroids=None).collect()
-    assert called.get("hit"), "tier='auto' did not route to the Arrow kernel"
-    jvm = sim.ivf_topk(
-        queries, emb, k=5, n_centroids=None, tier="jvm"
-    ).collect()
+    assert called.get("hit"), "ivf_topk did not route to the Arrow kernel"
+    with monkeypatch.context() as m:
+        m.setattr(sim, "ARROW_TIER_MIN_ROWS", 10**12)
+        jvm = sim.ivf_topk(queries, emb, k=5, n_centroids=None).collect()
     key = lambda r: (r.query_id, r.rank)
     assert sorted(routed, key=key) == sorted(jvm, key=key)
     # below the crossover nothing routes (restore the real constant);
@@ -818,11 +818,13 @@ def test_ivf_auto_two_level_dispatch(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(sim, "TWO_LEVEL_AUTO_MIN_ROWS", 1)
     monkeypatch.setattr(sim, "TWO_LEVEL_MIN_CELLS", 1)
     queries = emb.filter(emb.vec_id % 50 == 0)
+    built = []
+    real = sim._two_level_index
+    monkeypatch.setattr(sim, "_two_level_index", lambda *a: built.append(1) or real(*a))
     auto = _topk_sets(sim.ivf_topk(queries, emb, k=5, n_centroids=32))
-    forced = _topk_sets(
-        sim.ivf_topk(queries, emb, k=5, n_centroids=32, assignment="two_level")
-    )
-    assert auto == forced  # auto resolved to two_level (deterministic path)
+    assert built, "auto sizing did not resolve to two_level"
+    exact = _topk_sets(sim.brute_force_topk(queries, emb, k=5))
+    assert auto.keys() == exact.keys()
 
 
 def test_ivfpq_residual_recall_and_shape(spark, sf_dir):
@@ -844,3 +846,48 @@ def test_ivfpq_residual_recall_and_shape(spark, sf_dir):
     # the round-7 'Done' bar: recall >= the raw variant's CONTRACT (0.5),
     # not necessarily >= the raw variant's point value
     assert r >= 0.5 and raw_r >= 0.5
+
+
+def test_ivf_entry_points_count_corpus_at_most_once(spark, sf_dir, monkeypatch):
+    """Size routing costs at most ONE count job per call: the registry
+    defaults (IVF_CENTROIDS=16, below TWO_LEVEL_MIN_CELLS) count zero
+    times; auto cell counts count exactly once — also when ivf_topk
+    routes the call to the Arrow kernel, which must not re-count."""
+    emb = load(spark, sf_dir, "embeddings")
+    queries = emb.filter(emb.vec_id % 50 == 0)
+    frame_cls = type(emb)  # the concrete (classic or Connect) DataFrame
+    real = frame_cls.count
+    counts = []
+
+    def spy(self):
+        counts.append(1)
+        return real(self)
+
+    monkeypatch.setattr(frame_cls, "count", spy)
+
+    def n_counts(build):
+        counts.clear()
+        build().collect()
+        return len(counts)
+
+    for fn in (sim.ivf_topk, sim.ivf_topk_arrow, sim.ivfpq_topk):
+        assert n_counts(lambda: fn(queries, emb, k=5)) == 0, fn.__name__
+        assert n_counts(lambda: fn(queries, emb, k=5, n_centroids=None)) == 1, fn.__name__
+    assert n_counts(lambda: sim.semantic_dup_pairs(emb)) == 1
+    with monkeypatch.context() as m:
+        m.setattr(sim, "ARROW_TIER_MIN_ROWS", 1)
+        arrow_hit = []
+        real_arrow = sim._ivf_topk_arrow
+        m.setattr(sim, "_ivf_topk_arrow", lambda *a: arrow_hit.append(1) or real_arrow(*a))
+        assert n_counts(lambda: sim.ivf_topk(queries, emb, k=5, n_centroids=None)) == 1
+        assert arrow_hit
+
+
+def test_semantic_dedup_rejects_unknown_pair_engine(spark, sf_dir):
+    """A misspelt engine must fail loudly instead of silently running
+    the JVM self-join."""
+    emb = load(spark, sf_dir, "embeddings")
+    with pytest.raises(ValueError, match="pair_engine"):
+        sim.semantic_dup_pairs(emb, pair_engine="Arrow")
+    with pytest.raises(ValueError, match="pair_engine"):
+        sim.semantic_dedup(emb, pair_engine="gpu")

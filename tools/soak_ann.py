@@ -1,13 +1,14 @@
 """ANN-tier scale soak (round-9 verdict #3): the similarity family's
 missing decade.
 
-Drives the IVF family END-TO-END with the production knobs
-(``n_centroids=None`` -> auto ~sqrt(N) cells, ``assignment="auto"`` ->
-each execution tier dispatches at its own measured crossover,
-``fit_fraction=None`` -> sample-bounded Lloyd) at one or more scale
-dirs, measuring wall, stage metrics (spill), and recall@k against the
-exact brute-force ground truth computed in the same session. The
-resolved knobs are printed per sf so the two-level dispatch is
+Drives the IVF family END-TO-END with the production size routing
+(``n_centroids=None`` -> auto ~sqrt(N) cells, two-level assignment at
+each execution tier's own measured crossover, sample-bounded Lloyd
+fit) at one or more scale dirs, measuring wall, stage metrics (spill),
+and recall@k against the exact brute-force ground truth computed in the
+same session. The ``ivf_auto_jvm`` row holds ``ivf_topk`` on the JVM
+tier by raising ``ARROW_TIER_MIN_ROWS`` for its build. The resolved
+sizes are printed per sf so the two-level dispatch is
 OBSERVED, not forced: at sf100e (2M rows) auto-cells ~ 1414 crosses
 both the JVM gate (TWO_LEVEL_MIN_CELLS=64) and the Arrow gate
 (ARROW_TWO_LEVEL_MIN_CELLS=1024) naturally — the first corpus where
@@ -79,14 +80,13 @@ def main() -> None:
             (F.col("vec_id") % QUERY_MOD == 0) & (F.col("vec_id") < QUERY_CAP)
         )
         n_rows = emb.count()
-        cells, assign, fitf, tier = sim._resolve_ivf_knobs(
-            emb, None, "auto", None, tier="auto")
+        cells, fitf, two_level, arrow = sim._resolve_ivf(emb, None, None)
         probes = sim.resolve_probes(args.probes or None, cells)
         print(json.dumps({
             "sf_dir": sf_dir, "rows": n_rows, "resolved_cells": cells,
-            "resolved_assignment": assign,
-            "resolved_fit_fraction": round(fitf, 5) if fitf else fitf,
-            "resolved_tier": tier, "resolved_probes": probes,
+            "resolved_assignment": "two_level" if two_level else "flat",
+            "resolved_fit_fraction": round(fitf, 5),
+            "resolved_tier": "arrow" if arrow else "jvm", "resolved_probes": probes,
             "jvm_gate": sim.TWO_LEVEL_MIN_CELLS,
             "arrow_gate": sim.ARROW_TWO_LEVEL_MIN_CELLS,
             "tier_gate_rows": sim.ARROW_TIER_MIN_ROWS,
@@ -95,25 +95,27 @@ def main() -> None:
         exact = topk_sets(sim.brute_force_topk(queries, emb, k=args.k))
 
         pk = {"n_probes": args.probes} if args.probes else {}
+
+        def ivf_jvm_tier():
+            saved = sim.ARROW_TIER_MIN_ROWS
+            sim.ARROW_TIER_MIN_ROWS = math.inf
+            try:
+                return sim.ivf_topk(queries, emb, k=args.k, n_centroids=None, **pk)
+            finally:
+                sim.ARROW_TIER_MIN_ROWS = saved
+
         variants = {
-            "ivf_auto_jvm": lambda: sim.ivf_topk(
-                queries, emb, k=args.k, n_centroids=None, assignment="auto",
-                tier="jvm", **pk),
+            "ivf_auto_jvm": ivf_jvm_tier,
             "ivf_auto_tier": lambda: sim.ivf_topk(
-                queries, emb, k=args.k, n_centroids=None, assignment="auto",
-                tier="auto", **pk),
+                queries, emb, k=args.k, n_centroids=None, **pk),
             "ivf_auto_arrow": lambda: sim.ivf_topk_arrow(
-                queries, emb, k=args.k, n_centroids=None, assignment="auto",
-                **pk),
+                queries, emb, k=args.k, n_centroids=None, **pk),
             "ivfpq_auto_raw": lambda: sim.ivfpq_topk(
-                queries, emb, k=args.k, n_centroids=None, assignment="auto",
-                **pk),
+                queries, emb, k=args.k, n_centroids=None, **pk),
             "ivfpq_auto_residual": lambda: sim.ivfpq_topk(
-                queries, emb, k=args.k, n_centroids=None, assignment="auto",
-                residual=True, **pk),
+                queries, emb, k=args.k, n_centroids=None, residual=True, **pk),
             "ivfpq_auto_opq": lambda: sim.opq_ivfpq_topk(
-                queries, emb, k=args.k, n_centroids=None, assignment="auto",
-                **pk),
+                queries, emb, k=args.k, n_centroids=None, **pk),
         }
         if args.variants:
             keep = set(args.variants.split(","))
