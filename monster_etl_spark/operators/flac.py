@@ -48,11 +48,9 @@ def _build_flac_codec(force_scalar=False):
     import hashlib
     import struct
 
-    try:
-        import numpy as _np
-    except ImportError:  # pragma: no cover - numpy is baked into the image
-        _np = None
-    np = None if force_scalar else _np
+    import numpy
+
+    np = None if force_scalar else numpy
 
     # ---- CRCs (RFC 9639: CRC-8 poly 0x07, CRC-16 poly 0x8005, init 0) ----
     CRC8_TAB = []

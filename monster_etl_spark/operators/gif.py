@@ -34,7 +34,7 @@ discipline as ``operators/jpeg.py``).
 
 Vectorization (round-5 verdict "What's wrong #1", following the
 Arrow-kNN kernel discipline of ``operators/similarity.py``): the
-batch-parallel stages run on numpy when it is importable —
+batch-parallel stages run on numpy —
 LZW code extraction (bit-unpack + per-batch matmul between the
 width-change boundaries the dictionary growth makes deterministic),
 palette expansion (``pal[idx]`` fancy-indexing), canvas composition
@@ -55,11 +55,9 @@ from __future__ import annotations
 def _build_gif_codec(force_scalar=False):
     import struct
 
-    try:
-        import numpy as _np
-    except ImportError:  # pragma: no cover - numpy is baked into the image
-        _np = None
-    np = None if force_scalar else _np
+    import numpy
+
+    np = None if force_scalar else numpy
 
     def _pack_lzw_8bit(data):
         """Spec-conformant "uncompressed" LZW for an 8-bit palette:
@@ -1091,8 +1089,7 @@ def _build_gif_codec(force_scalar=False):
         """Pooled ``decode_frame_stats`` over a list of blobs: returns
         ``[result_or_None, ...]`` with each entry equal to
         ``decode_frame_stats(blob, max_frames)`` (asserted in tests).
-        Without numpy, delegates to the per-blob scalar path (the
-        force_scalar twin)."""
+        The force_scalar build delegates to the per-blob scalar path."""
         if np is None:
             return [decode_frame_stats(b, max_frames) for b in blobs]
         parsed = []

@@ -90,28 +90,39 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def _chunked_media_yield(pdf, encode_one, chunk=512):
-    """Yield per-chunk (media_id, content) frames from one Arrow batch of
-    (media_id, text). One 10k-doc batch yielded as a single pandas frame
-    holds every encoded blob live through serialization and stalls the
-    chained-Python-stage pipeline (round-7 sf10 finding: ~30% core
-    utilization on the GIF tier); small output batches pipeline smoothly
-    and keep worker memory flat. ``encode_one`` takes (media_id, text)."""
-    import pandas as pd
+def _chunked_media_worker(encode_chunk, chunk=512):
+    """The one documents->media adapter worker: (media_id, text) Arrow
+    batches in, per-chunk (media_id, content) frames out.
+    ``encode_chunk(media_ids, texts)`` returns one blob per document of a
+    chunk, so vectorized encoders see the whole chunk at once.
 
-    mids = pdf["media_id"].astype("int64")
-    texts = list(pdf["text"])
-    for lo in range(0, len(texts), chunk):
-        sl = mids.iloc[lo : lo + chunk]
-        yield pd.DataFrame(
-            {
-                "media_id": sl,
-                "content": [
-                    encode_one(int(m), t)
-                    for m, t in zip(sl, texts[lo : lo + chunk])
-                ],
-            }
-        )
+    Why chunks: one 10k-doc batch yielded as a single pandas frame holds
+    every encoded blob (and every intermediate pixel buffer) live through
+    serialization, which saturates the allocator under 32 concurrent
+    workers and stalls the chained-Python-stage pipeline (round-7 sf10
+    finding: ~30% core utilization on the GIF tier; the JPEG adapter cost
+    5x the codec's own time before chunking); small output batches
+    pipeline smoothly and keep worker memory flat."""
+
+    def _worker(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            mids = pdf["media_id"].astype("int64")
+            texts = list(pdf["text"])
+            for lo in range(0, len(texts), chunk):
+                sl = mids.iloc[lo : lo + chunk]
+                yield pd.DataFrame(
+                    {"media_id": sl, "content": encode_chunk(sl, texts[lo : lo + chunk])}
+                )
+
+    return _worker
+
+
+def _per_doc(encode_one):
+    """Lift a per-document encoder ``encode_one(media_id, text)`` to the
+    chunk encoder :func:`_chunked_media_worker` takes."""
+    return lambda mids, texts: [encode_one(int(m), t) for m, t in zip(mids, texts)]
 
 
 def _cpu_spread(documents: DataFrame) -> DataFrame:
@@ -146,13 +157,16 @@ def _cpu_spread(documents: DataFrame) -> DataFrame:
     return documents.repartition(target)
 
 
-def _doc_media_df(documents: DataFrame, worker) -> DataFrame:
+def _doc_media_df(
+    documents: DataFrame, worker, schema="media_id long, content binary"
+) -> DataFrame:
     """The shared adapter plan shape: spread the lightweight (media_id,
     text) projection (see ``_cpu_spread``), then run the codec worker as
-    one narrow ``mapInPandas`` producing the binary content column."""
+    one narrow ``mapInPandas`` producing ``schema`` (by default the
+    binary content column)."""
     return _cpu_spread(
         documents.select(F.col("doc_id").alias("media_id"), F.col("text"))
-    ).mapInPandas(worker, schema="media_id long, content binary")
+    ).mapInPandas(worker, schema=schema)
 
 
 def fused_media_stats(documents: DataFrame, media_worker, stats_worker, schema) -> DataFrame:
@@ -173,17 +187,7 @@ def fused_media_stats(documents: DataFrame, media_worker, stats_worker, schema) 
     def _fused(batches):
         yield from stats_worker(media_worker(batches))
 
-    return _cpu_spread(
-        documents.select(F.col("doc_id").alias("media_id"), F.col("text"))
-    ).mapInPandas(_fused, schema=schema)
-
-
-def _fake_decode(content: bytes) -> tuple[int, int]:
-    """Deterministic stand-in for an image decode: 'dimensions' derived from
-    content length. Used only for content that is not a recognized image
-    container (see ``_header_dims``)."""
-    n = len(content)
-    return (n % 640) + 1, (n % 480) + 1
+    return _doc_media_df(documents, _fused, schema)
 
 
 def _header_dims_fn():
@@ -276,6 +280,46 @@ def _full_decode_fn():
     return full_decode
 
 
+def _image_features_worker(real_decode: bool = False):
+    """The one image-feature worker: (media_id, content) batches ->
+    IMAGE_FEATURES_SCHEMA frames. Dimensions come from the first link of
+    the chain that answers: a full pixel decode through the shipped
+    codecs (``real_decode=True`` only), the container header
+    (``_header_dims``), then the deterministic fake derived from content
+    length (the synthetic corpus is text bytes). The decode and
+    header-parse closures are captured here, not referenced via the
+    module, so cloudpickle ships them by value."""
+    full_decode = _full_decode_fn() if real_decode else None
+    header_dims = _header_dims_fn()
+
+    def dims(c):
+        d = full_decode(c) if full_decode is not None else None
+        if d is not None:
+            return d[0], d[1]
+        n = len(c)
+        return header_dims(c) or ((n % 640) + 1, (n % 480) + 1)
+
+    def _worker(batches):
+        import zlib
+
+        import pandas as pd
+
+        for pdf in batches:
+            contents = [bytes(c) for c in pdf["content"]]
+            wh = [dims(c) for c in contents]
+            yield pd.DataFrame(
+                {
+                    "media_id": pdf["media_id"].astype("int64"),
+                    "n_bytes": [len(c) for c in contents],
+                    "width": [w for w, _ in wh],
+                    "height": [h for _, h in wh],
+                    "byte_crc": [zlib.crc32(c) for c in contents],
+                }
+            )
+
+    return _worker
+
+
 def decode_image_batch(
     batches: "Iterator[pd.DataFrame]", real_decode: bool = False
 ) -> "Iterator[pd.DataFrame]":
@@ -291,28 +335,7 @@ def decode_image_batch(
     IMAGE_FEATURES_SCHEMA. Pure per-row computation — safe to run on any
     partitioning.
     """
-    import pandas as pd
-    import zlib
-
-    full_decode = _full_decode_fn() if real_decode else None
-    for pdf in batches:
-        contents = [bytes(c) for c in pdf["content"]]
-        if real_decode:
-            dims = []
-            for c in contents:
-                d = full_decode(c)
-                dims.append((d[0], d[1]) if d else (_header_dims(c) or _fake_decode(c)))
-        else:
-            dims = [_header_dims(c) or _fake_decode(c) for c in contents]
-        yield pd.DataFrame(
-            {
-                "media_id": pdf["media_id"].astype("int64"),
-                "n_bytes": [len(c) for c in contents],
-                "width": [w for w, _ in dims],
-                "height": [h for _, h in dims],
-                "byte_crc": [zlib.crc32(c) for c in contents],
-            }
-        )
+    yield from _image_features_worker(real_decode)(batches)
 
 
 def extract_image_features(media: DataFrame, real_decode: bool = False) -> DataFrame:
@@ -332,74 +355,8 @@ def extract_image_features(media: DataFrame, real_decode: bool = False) -> DataF
     beyond pandas/zlib. Module-level UDFs pickle by reference and break on
     executors without the package installed.
     """
-    if real_decode:
-        # the decode + header-parse closures are captured here (not
-        # referenced via the module) so cloudpickle ships them by value
-        full_decode = _full_decode_fn()
-        header_dims = _header_dims_fn()
-
-        def _worker_real(batches):
-            import zlib
-
-            import pandas as pd
-
-            for pdf in batches:
-                contents = [bytes(c) for c in pdf["content"]]
-                dims = []
-                for c in contents:
-                    d = full_decode(c)
-                    if d is not None:
-                        dims.append((d[0], d[1]))
-                    else:
-                        # same fallback chain as decode_image_batch: header
-                        # dims when the container is parseable, else the
-                        # deterministic fake
-                        n = len(c)
-                        dims.append(
-                            header_dims(c)
-                            or ((n % 640) + 1, (n % 480) + 1)
-                        )
-                yield pd.DataFrame(
-                    {
-                        "media_id": pdf["media_id"].astype("int64"),
-                        "n_bytes": [len(c) for c in contents],
-                        "width": [w for w, _ in dims],
-                        "height": [h for _, h in dims],
-                        "byte_crc": [zlib.crc32(c) for c in contents],
-                    }
-                )
-
-        return media.select("media_id", "content").mapInPandas(
-            _worker_real, schema=IMAGE_FEATURES_SCHEMA
-        )
-
-    # captured by value via the factory (see _header_dims_fn): the closure
-    # stays self-contained, no package needed on executors
-    header_dims = _header_dims_fn()
-
-    def _worker(batches):
-        import zlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            contents = [bytes(c) for c in pdf["content"]]
-            dims = [
-                header_dims(c) or ((len(c) % 640) + 1, (len(c) % 480) + 1)
-                for c in contents
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "n_bytes": [len(c) for c in contents],
-                    "width": [w for w, _ in dims],
-                    "height": [h for _, h in dims],
-                    "byte_crc": [zlib.crc32(c) for c in contents],
-                }
-            )
-
     return media.select("media_id", "content").mapInPandas(
-        _worker, schema=IMAGE_FEATURES_SCHEMA
+        _image_features_worker(real_decode), schema=IMAGE_FEATURES_SCHEMA
     )
 
 
@@ -717,16 +674,9 @@ def _png_media_worker(width: int = 32, interlaced: bool = False):
     from monster_etl_spark.operators.png import _build_png_codec
 
     encode_local = _build_png_codec()["encode_gray8"]
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield from _chunked_media_yield(
-                pdf, lambda _m, t: encode_local(bytes(t, "utf-8"), width, interlaced)
-            )
-
-    return _worker
+    return _chunked_media_worker(
+        _per_doc(lambda _m, t: encode_local(bytes(t, "utf-8"), width, interlaced))
+    )
 
 
 def documents_as_jpeg_media(
@@ -762,38 +712,41 @@ def _jpeg_quality_media_worker(blocks_per_row: int = 8, n_qualities: int = 8):
     bpr = blocks_per_row
     nq = n_qualities
 
+    def encode(mids, texts):
+        pixels = _jpeg_block_pixels(texts, bpr)
+        content = [None] * len(pixels)
+        for q in range(1, nq + 1):
+            ix = [i for i, m in enumerate(mids) if 1 + (m % nq) == q]
+            if not ix:
+                continue
+            enc = encode_batch_local(
+                [pixels[i] for i in ix], bpr * 8, q, restart_interval=bpr
+            )
+            for i, blob in zip(ix, enc):
+                content[i] = blob
+        return content
+
+    return _chunked_media_worker(encode)
+
+
+def _header_profile_worker(profile_fn, fields):
+    """The one header-profiler worker: (media_id, content) batches ->
+    (media_id, *fields, profiled) frames. ``profile_fn(blob)`` returns a
+    dict or None; a null blob profiles as nothing, and a row that does
+    not profile reads ``profiled=false`` with every field null."""
+
     def _worker(batches):
-        import numpy as np
         import pandas as pd
 
-        def doc_pixels(text):
-            data = bytes(text, "utf-8")
-            n_rows = max(1, -(-len(data) // bpr))
-            padded = data.ljust(n_rows * bpr, b"\x00")
-            arr = np.frombuffer(padded, np.uint8).reshape(n_rows, bpr)
-            return np.repeat(np.repeat(arr, 8, axis=1), 8, axis=0).tobytes()
-
-        CHUNK = 512
         for pdf in batches:
-            mids = pdf["media_id"].astype("int64")
-            texts = list(pdf["text"])
-            for lo in range(0, len(texts), CHUNK):
-                sub_m = mids.iloc[lo : lo + CHUNK].to_numpy()
-                pixels = [doc_pixels(t) for t in texts[lo : lo + CHUNK]]
-                content = [None] * len(pixels)
-                for q in range(1, nq + 1):
-                    ix = [i for i, m in enumerate(sub_m) if 1 + (m % nq) == q]
-                    if not ix:
-                        continue
-                    enc = encode_batch_local(
-                        [pixels[i] for i in ix], bpr * 8, q,
-                        restart_interval=bpr,
-                    )
-                    for i, blob in zip(ix, enc):
-                        content[i] = blob
-                yield pd.DataFrame(
-                    {"media_id": sub_m, "content": content}
-                )
+            profiles = [
+                profile_fn(c) if c is not None else None for c in pdf["content"]
+            ]
+            rows = {"media_id": pdf["media_id"].astype("int64")}
+            for k in fields:
+                rows[k] = [p.get(k) if p is not None else None for p in profiles]
+            rows["profiled"] = [p is not None for p in profiles]
+            yield pd.DataFrame(rows)
 
     return _worker
 
@@ -805,29 +758,13 @@ def _jpeg_profile_worker():
     contract. Unparseable blobs profile as ``profiled=false`` nulls."""
     from monster_etl_spark.operators.jpeg import jpeg_header_profile_fn
 
-    profile_local = jpeg_header_profile_fn()
-    fields = (
-        "sof_marker", "width", "height", "n_quant_tables", "table_sum",
-        "restart_interval", "scaled_percent", "quality_estimate",
+    return _header_profile_worker(
+        jpeg_header_profile_fn(),
+        (
+            "sof_marker", "width", "height", "n_quant_tables", "table_sum",
+            "restart_interval", "scaled_percent", "quality_estimate",
+        ),
     )
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {"media_id": pdf["media_id"].astype("int64")}
-            cols = {k: [] for k in fields}
-            flags = []
-            for c in pdf["content"]:
-                p = profile_local(c) if c is not None else None
-                flags.append(p is not None)
-                for k in fields:
-                    cols[k].append(p.get(k) if p is not None else None)
-            rows.update(cols)
-            rows["profiled"] = flags
-            yield pd.DataFrame(rows)
-
-    return _worker
 
 
 def audio_header_profile_fn():
@@ -906,17 +843,13 @@ def _mixed_audio_media_worker(sample_rate: int = 16000):
     wav_local = _build_wav_codec()["encode_pcm16"]
     flac_local = _build_flac_codec()["encode_pcm16"]
     sr = sample_rate
-
-    def _worker(batches):
-        for pdf in batches:
-            yield from _chunked_media_yield(
-                pdf,
-                lambda m, t: (wav_local if m % 2 == 0 else flac_local)(
-                    [(v - 128) * 256 for v in bytes(t, "utf-8")], sr
-                ),
+    return _chunked_media_worker(
+        _per_doc(
+            lambda m, t: (wav_local if m % 2 == 0 else flac_local)(
+                [(v - 128) * 256 for v in bytes(t, "utf-8")], sr
             )
-
-    return _worker
+        )
+    )
 
 
 def _mp4_media_worker():
@@ -957,11 +890,7 @@ def _mp4_media_worker():
             write_mehd=(m % 8 == 3),
         )
 
-    def _worker(batches):
-        for pdf in batches:
-            yield from _chunked_media_yield(pdf, _one)
-
-    return _worker
+    return _chunked_media_worker(_per_doc(_one))
 
 
 def _mp4_profile_worker():
@@ -969,31 +898,15 @@ def _mp4_profile_worker():
     ``mp4.mp4_box_profile_fn`` for the field contract)."""
     from monster_etl_spark.operators.mp4 import mp4_box_profile_fn
 
-    profile_local = mp4_box_profile_fn()
-    fields = (
-        "major_brand", "timescale", "duration_ms", "n_tracks",
-        "video_codec", "video_width", "video_height", "audio_codec",
-        "audio_channels", "audio_sample_rate", "mdat_bytes",
-        "fragmented", "n_fragments", "frag_samples",
+    return _header_profile_worker(
+        mp4_box_profile_fn(),
+        (
+            "major_brand", "timescale", "duration_ms", "n_tracks",
+            "video_codec", "video_width", "video_height", "audio_codec",
+            "audio_channels", "audio_sample_rate", "mdat_bytes",
+            "fragmented", "n_fragments", "frag_samples",
+        ),
     )
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {"media_id": pdf["media_id"].astype("int64")}
-            cols = {k: [] for k in fields}
-            flags = []
-            for c in pdf["content"]:
-                p = profile_local(c) if c is not None else None
-                flags.append(p is not None)
-                for k in fields:
-                    cols[k].append(p.get(k) if p is not None else None)
-            rows.update(cols)
-            rows["profiled"] = flags
-            yield pd.DataFrame(rows)
-
-    return _worker
 
 
 def _mp3_media_worker():
@@ -1020,11 +933,7 @@ def _mp3_media_worker():
             xing={2: "xing", 4: "info"}.get(m % 5),
         )
 
-    def _worker(batches):
-        for pdf in batches:
-            yield from _chunked_media_yield(pdf, _one)
-
-    return _worker
+    return _chunked_media_worker(_per_doc(_one))
 
 
 def _mp3_profile_worker():
@@ -1032,30 +941,14 @@ def _mp3_profile_worker():
     ``mp3.mp3_frame_profile_fn`` for the field contract)."""
     from monster_etl_spark.operators.mp3 import mp3_frame_profile_fn
 
-    profile_local = mp3_frame_profile_fn()
-    fields = (
-        "version", "layer", "bitrate_kbps", "sample_rate", "channel_mode",
-        "n_frames", "cbr", "duration_ms", "id3_bytes", "stream_bytes",
-        "vbr_header",
+    return _header_profile_worker(
+        mp3_frame_profile_fn(),
+        (
+            "version", "layer", "bitrate_kbps", "sample_rate", "channel_mode",
+            "n_frames", "cbr", "duration_ms", "id3_bytes", "stream_bytes",
+            "vbr_header",
+        ),
     )
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {"media_id": pdf["media_id"].astype("int64")}
-            cols = {k: [] for k in fields}
-            flags = []
-            for c in pdf["content"]:
-                p = profile_local(c) if c is not None else None
-                flags.append(p is not None)
-                for k in fields:
-                    cols[k].append(p.get(k) if p is not None else None)
-            rows.update(cols)
-            rows["profiled"] = flags
-            yield pd.DataFrame(rows)
-
-    return _worker
 
 
 def _ogg_media_worker():
@@ -1078,11 +971,7 @@ def _ogg_media_worker():
             pre_skip=312 + (m % 5) * 24,
         )
 
-    def _worker(batches):
-        for pdf in batches:
-            yield from _chunked_media_yield(pdf, _one)
-
-    return _worker
+    return _chunked_media_worker(_per_doc(_one))
 
 
 def _ogg_profile_worker():
@@ -1090,30 +979,14 @@ def _ogg_profile_worker():
     ``ogg.ogg_page_profile_fn`` for the field contract)."""
     from monster_etl_spark.operators.ogg import ogg_page_profile_fn
 
-    profile_local = ogg_page_profile_fn()
-    fields = (
-        "codec", "n_pages", "n_streams", "channels", "input_rate",
-        "pre_skip", "last_granule", "duration_ms", "eos_seen",
-        "body_bytes",
+    return _header_profile_worker(
+        ogg_page_profile_fn(),
+        (
+            "codec", "n_pages", "n_streams", "channels", "input_rate",
+            "pre_skip", "last_granule", "duration_ms", "eos_seen",
+            "body_bytes",
+        ),
     )
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {"media_id": pdf["media_id"].astype("int64")}
-            cols = {k: [] for k in fields}
-            flags = []
-            for c in pdf["content"]:
-                p = profile_local(c) if c is not None else None
-                flags.append(p is not None)
-                for k in fields:
-                    cols[k].append(p.get(k) if p is not None else None)
-            rows.update(cols)
-            rows["profiled"] = flags
-            yield pd.DataFrame(rows)
-
-    return _worker
 
 
 def _webm_media_worker():
@@ -1147,11 +1020,7 @@ def _webm_media_worker():
             unknown_segment_size=(m % 5 == 0),
         )
 
-    def _worker(batches):
-        for pdf in batches:
-            yield from _chunked_media_yield(pdf, _one)
-
-    return _worker
+    return _chunked_media_worker(_per_doc(_one))
 
 
 def _webm_profile_worker():
@@ -1159,59 +1028,27 @@ def _webm_profile_worker():
     ``webm.webm_profile_fn`` for the field contract)."""
     from monster_etl_spark.operators.webm import webm_profile_fn
 
-    profile_local = webm_profile_fn()
-    fields = (
-        "doc_type", "doc_type_version", "timestamp_scale", "duration_ms",
-        "n_tracks", "video_codec", "video_width", "video_height",
-        "audio_codec", "audio_channels", "audio_sample_rate",
-        "n_clusters", "block_bytes",
+    return _header_profile_worker(
+        webm_profile_fn(),
+        (
+            "doc_type", "doc_type_version", "timestamp_scale", "duration_ms",
+            "n_tracks", "video_codec", "video_width", "video_height",
+            "audio_codec", "audio_channels", "audio_sample_rate",
+            "n_clusters", "block_bytes",
+        ),
     )
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {"media_id": pdf["media_id"].astype("int64")}
-            cols = {k: [] for k in fields}
-            flags = []
-            for c in pdf["content"]:
-                p = profile_local(c) if c is not None else None
-                flags.append(p is not None)
-                for k in fields:
-                    cols[k].append(p.get(k) if p is not None else None)
-            rows.update(cols)
-            rows["profiled"] = flags
-            yield pd.DataFrame(rows)
-
-    return _worker
 
 
 def _audio_profile_worker():
     """Worker builder for the audio-container profiler (see
     ``audio_header_profile_fn`` for the field contract)."""
-    profile_local = audio_header_profile_fn()
-    fields = (
-        "container", "wav_format", "sample_rate", "n_channels",
-        "bits_per_sample", "n_samples", "duration_ms",
+    return _header_profile_worker(
+        audio_header_profile_fn(),
+        (
+            "container", "wav_format", "sample_rate", "n_channels",
+            "bits_per_sample", "n_samples", "duration_ms",
+        ),
     )
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {"media_id": pdf["media_id"].astype("int64")}
-            cols = {k: [] for k in fields}
-            flags = []
-            for c in pdf["content"]:
-                p = profile_local(c) if c is not None else None
-                flags.append(p is not None)
-                for k in fields:
-                    cols[k].append(p.get(k) if p is not None else None)
-            rows.update(cols)
-            rows["profiled"] = flags
-            yield pd.DataFrame(rows)
-
-    return _worker
 
 
 def _jpeg_media_worker(blocks_per_row: int = 8, progressive: bool = False):
@@ -1221,54 +1058,37 @@ def _jpeg_media_worker(blocks_per_row: int = 8, progressive: bool = False):
     encode_prog_local = codec_local["encode_gray8_progressive_batch"]
     encode_batch_local = codec_local["encode_gray8_batch"]
     bpr = blocks_per_row
-    prog = progressive
 
-    def _worker(batches):
-        import numpy as np
-        import pandas as pd
+    def encode(_mids, texts):
+        pixels = _jpeg_block_pixels(texts, bpr)
+        if progressive:
+            return encode_prog_local(pixels, bpr * 8, 1)
+        # one RSTn per block row: restart segments decode to the SAME
+        # pixels (DRI only re-segments the entropy stream, so the
+        # analytic oracle is untouched) while letting the decoder run its
+        # lockstep multi-lane fast path; each chunk encodes in one
+        # vectorized pass
+        return encode_batch_local(pixels, bpr * 8, 1, restart_interval=bpr)
 
-        def doc_pixels(text):
-            data = bytes(text, "utf-8")
-            n_rows = max(1, -(-len(data) // bpr))
-            padded = data.ljust(n_rows * bpr, b"\x00")
-            # byte k -> constant 8x8 block: expand 8x horizontally then
-            # 8x vertically (identical bytes to the nested-join scalar)
-            arr = np.frombuffer(padded, np.uint8).reshape(n_rows, bpr)
-            return np.repeat(np.repeat(arr, 8, axis=1), 8, axis=0).tobytes()
+    return _chunked_media_worker(encode)
 
-        # bounded sub-batches: an Arrow batch can carry 10k docs, and
-        # holding every doc's pixel buffer live at once (~40 KB each)
-        # saturates the allocator when 32 workers do it concurrently —
-        # the measured sf10 adapter cost was 5x the codec's own time
-        # before chunking
-        CHUNK = 512
-        for pdf in batches:
-            mids = pdf["media_id"].astype("int64")
-            texts = list(pdf["text"])
-            for lo in range(0, len(texts), CHUNK):
-                pixels = [doc_pixels(t) for t in texts[lo : lo + CHUNK]]
-                if prog:
-                    content = encode_prog_local(pixels, bpr * 8, 1)
-                else:
-                    # one RSTn per block row: restart segments decode to
-                    # the SAME pixels (DRI only re-segments the entropy
-                    # stream, so the analytic oracle is untouched) while
-                    # letting the decoder run its lockstep multi-lane
-                    # fast path; each chunk encodes in one vectorized
-                    # pass
-                    content = encode_batch_local(
-                        pixels, bpr * 8, 1, restart_interval=bpr
-                    )
-                # yield per chunk: small Arrow batches pipeline smoothly
-                # and keep worker memory flat
-                yield pd.DataFrame(
-                    {
-                        "media_id": mids.iloc[lo : lo + CHUNK],
-                        "content": content,
-                    }
-                )
 
-    return _worker
+def _jpeg_block_pixels(texts, bpr):
+    """Gray8 pixel buffers for the JPEG adapters: document byte k becomes
+    the constant 8x8 block k, ``bpr`` blocks per row, zero blocks padding
+    the last block row."""
+    import numpy as np
+
+    out = []
+    for text in texts:
+        data = bytes(text, "utf-8")
+        n_rows = max(1, -(-len(data) // bpr))
+        arr = np.frombuffer(data.ljust(n_rows * bpr, b"\x00"), np.uint8)
+        # expand 8x horizontally then 8x vertically
+        out.append(
+            np.repeat(np.repeat(arr.reshape(n_rows, bpr), 8, axis=1), 8, axis=0).tobytes()
+        )
+    return out
 
 
 def documents_as_gif_media(documents: DataFrame, width: int = 32) -> DataFrame:
@@ -1286,16 +1106,9 @@ def _gif_media_worker(width: int = 32):
     from monster_etl_spark.operators.gif import _build_gif_codec
 
     encode_local = _build_gif_codec()["encode_gray8"]
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield from _chunked_media_yield(
-                pdf, lambda _m, t: encode_local(bytes(t, "utf-8"), width)
-            )
-
-    return _worker
+    return _chunked_media_worker(
+        _per_doc(lambda _m, t: encode_local(bytes(t, "utf-8"), width))
+    )
 
 
 def documents_as_media(documents: DataFrame) -> DataFrame:
@@ -1332,51 +1145,27 @@ def resize_images(
     without paying a decode.
     """
     target = width * height
-
-    if real_decode:
-        full_decode = _full_decode_fn()  # ships by value
-
-        def _worker_real(batches):
-            import numpy as np
-            import pandas as pd
-
-            def resize_one(c):
-                d = full_decode(c)
-                if d is None:  # fake fallback, same as the default kernel
-                    return (c * (target // len(c) + 1))[:target] if c else b"\x00" * target
-                w, h, ch, px = d
-                a = np.frombuffer(px, np.uint8).reshape(h, w, ch)
-                ys = (np.arange(height) * h) // height
-                xs = (np.arange(width) * w) // width
-                return a[ys][:, xs].tobytes()
-
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "media_id": pdf["media_id"].astype("int64"),
-                        "content": [resize_one(bytes(c)) for c in pdf["content"]],
-                        "width": width,
-                        "height": height,
-                    }
-                )
-
-        return media.select("media_id", "content").mapInPandas(
-            _worker_real, schema="media_id long, content binary, width int, height int"
-        )
+    full_decode = _full_decode_fn() if real_decode else None  # ships by value
 
     def _worker(batches):
+        import numpy as np
         import pandas as pd
 
+        def resize_one(c):
+            d = full_decode(c) if full_decode is not None else None
+            if d is None:  # the fake kernel
+                return (c * (target // len(c) + 1))[:target] if c else b"\x00" * target
+            w, h, ch, px = d
+            a = np.frombuffer(px, np.uint8).reshape(h, w, ch)
+            ys = (np.arange(height) * h) // height
+            xs = (np.arange(width) * w) // width
+            return a[ys][:, xs].tobytes()
+
         for pdf in batches:
-            contents = [bytes(c) for c in pdf["content"]]
-            resized = [
-                (c * (target // len(c) + 1))[:target] if c else b"\x00" * target
-                for c in contents
-            ]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"].astype("int64"),
-                    "content": resized,
+                    "content": [resize_one(bytes(c)) for c in pdf["content"]],
                     "width": width,
                     "height": height,
                 }
@@ -1622,21 +1411,15 @@ def _dib_avi_media_worker(frame_bytes: int = 16, fps: int = 10):
     avi_encode_dib_local = _build_avi_codec()["encode_dib"]
     fb = frame_bytes
 
-    def _worker(batches):
-        import pandas as pd
+    def doc_to_avi(_m, text):
+        data = bytes(text, "utf-8")
+        per = 2 * fb  # 2 rows per frame
+        n_frames = max(1, -(-len(data) // per))
+        padded = data.ljust(n_frames * per, b"\x00")
+        frames = [padded[k * per : (k + 1) * per] for k in range(n_frames)]
+        return avi_encode_dib_local(frames, fb, 2, fps)
 
-        def doc_to_avi(text):
-            data = bytes(text, "utf-8")
-            per = 2 * fb  # 2 rows per frame
-            n_frames = max(1, -(-len(data) // per))
-            padded = data.ljust(n_frames * per, b"\x00")
-            frames = [padded[k * per : (k + 1) * per] for k in range(n_frames)]
-            return avi_encode_dib_local(frames, fb, 2, fps)
-
-        for pdf in batches:
-            yield from _chunked_media_yield(pdf, lambda _m, t: doc_to_avi(t))
-
-    return _worker
+    return _chunked_media_worker(_per_doc(doc_to_avi))
 
 
 AUDIO_STATS_SCHEMA = T.StructType(
@@ -1754,19 +1537,13 @@ def _wav_media_worker(sample_rate: int = 16000):
     from monster_etl_spark.operators.wav import _build_wav_codec
 
     encode_local = _build_wav_codec()["encode_pcm16"]
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield from _chunked_media_yield(
-                pdf,
-                lambda _m, t: encode_local(
-                    [(v - 128) * 256 for v in bytes(t, "utf-8")], sample_rate
-                ),
+    return _chunked_media_worker(
+        _per_doc(
+            lambda _m, t: encode_local(
+                [(v - 128) * 256 for v in bytes(t, "utf-8")], sample_rate
             )
-
-    return _worker
+        )
+    )
 
 
 def documents_as_g711_media(
@@ -1786,19 +1563,13 @@ def _g711_media_worker(law: str = "ulaw", sample_rate: int = 8000):
     from monster_etl_spark.operators.wav import _build_wav_codec
 
     encode_local = _build_wav_codec()["encode_g711"]
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield from _chunked_media_yield(
-                pdf,
-                lambda _m, t: encode_local(
-                    [(v - 80) * 301 for v in bytes(t, "utf-8")], law, sample_rate
-                ),
+    return _chunked_media_worker(
+        _per_doc(
+            lambda _m, t: encode_local(
+                [(v - 80) * 301 for v in bytes(t, "utf-8")], law, sample_rate
             )
-
-    return _worker
+        )
+    )
 
 
 def documents_as_adpcm_media(
@@ -1827,25 +1598,19 @@ def _adpcm_media_worker(
     from monster_etl_spark.operators.wav import _build_wav_codec
 
     encode_local = _build_wav_codec()["encode_adpcm"]
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            # truncate CHARACTERS first, then encode: the DuckDB oracle
-            # slices with substr(text, 1, n) (character semantics), and
-            # a byte-prefix slice of non-ASCII text would both diverge
-            # from it and risk splitting a multi-byte code point
-            yield from _chunked_media_yield(
-                pdf,
-                lambda _m, t: encode_local(
-                    [(v - 128) * 256 for v in bytes(t[:max_samples], "utf-8")],
-                    sample_rate,
-                    block_bytes,
-                ),
+    # truncate CHARACTERS first, then encode: the DuckDB oracle slices
+    # with substr(text, 1, n) (character semantics), and a byte-prefix
+    # slice of non-ASCII text would both diverge from it and risk
+    # splitting a multi-byte code point
+    return _chunked_media_worker(
+        _per_doc(
+            lambda _m, t: encode_local(
+                [(v - 128) * 256 for v in bytes(t[:max_samples], "utf-8")],
+                sample_rate,
+                block_bytes,
             )
-
-    return _worker
+        )
+    )
 
 
 def documents_as_tiff_media(
@@ -1866,17 +1631,11 @@ def _tiff_media_worker(width: int = 32, rows_per_strip: int = 8):
     from monster_etl_spark.operators.tiff import _build_tiff_codec
 
     encode_local = _build_tiff_codec()["encode_gray8"]
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield from _chunked_media_yield(
-                pdf,
-                lambda _m, t: encode_local(bytes(t, "utf-8"), width, rows_per_strip, 5, 2),
-            )
-
-    return _worker
+    return _chunked_media_worker(
+        _per_doc(
+            lambda _m, t: encode_local(bytes(t, "utf-8"), width, rows_per_strip, 5, 2)
+        )
+    )
 
 
 def documents_as_bmp_media(documents: DataFrame, width: int = 32) -> DataFrame:
@@ -1894,17 +1653,9 @@ def _bmp_media_worker(width: int = 32):
     from monster_etl_spark.operators.bmp import _build_bmp_codec
 
     encode_local = _build_bmp_codec()["encode_gray8"]
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield from _chunked_media_yield(
-                pdf,
-                lambda m, t: encode_local(bytes(t, "utf-8"), width, bool(m % 2)),
-            )
-
-    return _worker
+    return _chunked_media_worker(
+        _per_doc(lambda m, t: encode_local(bytes(t, "utf-8"), width, bool(m % 2)))
+    )
 
 
 def documents_as_webp_media(documents: DataFrame, width: int = 32) -> DataFrame:
@@ -1924,25 +1675,18 @@ def _webp_media_worker(width: int = 32, static_codes: bool = True):
 
     encode_local = _build_webp_codec()["encode_gray8"]
     modes = ("lz77", "predictor", "palette")
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield from _chunked_media_yield(
-                pdf,
-                # static_codes: the fixed build-time prefix plans — the
-                # per-image Huffman+description floor collapses to an
-                # array replay, and every blob shares the decoder's
-                # memoized description parse (same pixels either way).
-                # Adaptive per-image codes stay first-class via their own
-                # registry row (multimodal_webp_adaptive_stats).
-                lambda m, t: encode_local(
-                    bytes(t, "utf-8"), width, modes[m % 3], static_codes
-                ),
+    # static_codes: the fixed build-time prefix plans — the per-image
+    # Huffman+description floor collapses to an array replay, and every
+    # blob shares the decoder's memoized description parse (same pixels
+    # either way). Adaptive per-image codes stay first-class via their
+    # own registry row (multimodal_webp_adaptive_stats).
+    return _chunked_media_worker(
+        _per_doc(
+            lambda m, t: encode_local(
+                bytes(t, "utf-8"), width, modes[m % 3], static_codes
             )
-
-    return _worker
+        )
+    )
 
 
 def documents_as_flac_media(
@@ -1962,19 +1706,13 @@ def _flac_media_worker(sample_rate: int = 16000):
     from monster_etl_spark.operators.flac import _build_flac_codec
 
     encode_local = _build_flac_codec()["encode_pcm16"]
-
-    def _worker(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield from _chunked_media_yield(
-                pdf,
-                lambda _m, t: encode_local(
-                    [(v - 128) * 256 for v in bytes(t, "utf-8")], sample_rate, 1
-                ),
+    return _chunked_media_worker(
+        _per_doc(
+            lambda _m, t: encode_local(
+                [(v - 128) * 256 for v in bytes(t, "utf-8")], sample_rate, 1
             )
-
-    return _worker
+        )
+    )
 
 
 def audio_window_spans(
@@ -2168,74 +1906,55 @@ def _animated_gif_media_worker(frame_bytes: int, delay_cs: int):
     pack_rows_local = _codec["pack_lzw_8bit_rows"]
     header_local = _codec["_identity_header"]
     fb = frame_bytes
+    desc_w = fb * 8
 
-    def _worker(batches):
-        import numpy as np
-        import pandas as pd
+    # every frame of every doc is a uniform fb*8 x 8 band (the tail frame
+    # is zero-padded to fb bytes), so LZW packing pools across the WHOLE
+    # chunk (one pack_lzw_8bit_rows call); assembly stitches per-doc
+    # headers + per-frame control blocks around the pooled image-data
+    # sections. Byte-identical to the per-frame encode_frames
+    # construction (asserted in tests/test_gif.py).
+    def chunk_to_gifs(_mids, texts):
         import struct
 
-        # every frame of every doc is a uniform fb*8 x 8 band (the tail
-        # frame is zero-padded to fb bytes), so LZW packing pools across
-        # the WHOLE chunk (one pack_lzw_8bit_rows call); assembly stitches
-        # per-doc headers + per-frame control blocks around the pooled
-        # image-data sections. Byte-identical to the per-frame
-        # encode_frames construction (asserted in tests/test_gif.py).
+        import numpy as np
+
         netscape = b"\x21\xff\x0bNETSCAPE2.0\x03\x01" + struct.pack("<H", 0) + b"\x00"
-        desc_w = fb * 8
-
-        def chunk_to_gifs(texts):
-            datas = [bytes(t, "utf-8") for t in texts]
-            n_frames = [max(1, -(-len(d) // fb)) for d in datas]
-            # (total_frames, fb) band bytes -> (total_frames, fb*64) pixels
-            bands = np.frombuffer(
-                b"".join(
-                    d.ljust(n * fb, b"\x00") for d, n in zip(datas, n_frames)
-                ),
-                np.uint8,
-            ).reshape(-1, fb)
-            pixels = np.repeat(bands, 8, axis=1)  # 8x horizontal blocks
-            pixels = np.repeat(pixels, 8, axis=0).reshape(-1, 8 * desc_w)
-            packed = pack_rows_local(pixels)
-            out = []
-            fi = 0
-            for n in n_frames:
-                blob = bytearray(header_local(desc_w, 8 * n))
-                blob += netscape
-                for k in range(n):
-                    flags = (1 & 7) << 2  # disposal=1
-                    tindex = 0
-                    if k:
-                        flags |= 1  # transparent index 0
-                    blob += (
-                        b"\x21\xf9\x04" + bytes([flags])
-                        + struct.pack("<H", delay_cs) + bytes([tindex, 0])
-                    )
-                    blob += b"\x2c" + struct.pack(
-                        "<HHHH", 0, k * 8, desc_w, 8
-                    ) + b"\x00"
-                    blob += packed[fi]
-                    fi += 1
-                blob += b"\x3b"
-                out.append(bytes(blob))
-            return out
-
-        # yield per bounded chunk: small output batches pipeline smoothly
-        # and keep worker memory flat; 48 keeps the pooled code/bit
-        # matrices cache-resident under 32-way concurrency (a 256-doc
-        # pool streams ~20 MB/phase per core and saturates DRAM)
-        CHUNK = 48
-        for pdf in batches:
-            mids = pdf["media_id"].astype("int64")
-            texts = list(pdf["text"])
-            for lo in range(0, len(texts), CHUNK):
-                yield pd.DataFrame(
-                    {
-                        "media_id": mids.iloc[lo : lo + CHUNK],
-                        "content": chunk_to_gifs(texts[lo : lo + CHUNK]),
-                    }
+        datas = [bytes(t, "utf-8") for t in texts]
+        n_frames = [max(1, -(-len(d) // fb)) for d in datas]
+        # (total_frames, fb) band bytes -> (total_frames, fb*64) pixels
+        bands = np.frombuffer(
+            b"".join(d.ljust(n * fb, b"\x00") for d, n in zip(datas, n_frames)),
+            np.uint8,
+        ).reshape(-1, fb)
+        pixels = np.repeat(bands, 8, axis=1)  # 8x horizontal blocks
+        pixels = np.repeat(pixels, 8, axis=0).reshape(-1, 8 * desc_w)
+        packed = pack_rows_local(pixels)
+        out = []
+        fi = 0
+        for n in n_frames:
+            blob = bytearray(header_local(desc_w, 8 * n))
+            blob += netscape
+            for k in range(n):
+                flags = (1 & 7) << 2  # disposal=1
+                tindex = 0
+                if k:
+                    flags |= 1  # transparent index 0
+                blob += (
+                    b"\x21\xf9\x04" + bytes([flags])
+                    + struct.pack("<H", delay_cs) + bytes([tindex, 0])
                 )
+                blob += b"\x2c" + struct.pack("<HHHH", 0, k * 8, desc_w, 8) + b"\x00"
+                blob += packed[fi]
+                fi += 1
+            blob += b"\x3b"
+            out.append(bytes(blob))
+        return out
 
-    return _worker
+    # 48-doc chunks keep the pooled code/bit matrices cache-resident
+    # under 32-way concurrency (a 256-doc pool streams ~20 MB/phase per
+    # core and saturates DRAM)
+    return _chunked_media_worker(chunk_to_gifs, chunk=48)
 
 
 def gif_frame_stats_from_documents(

@@ -32,24 +32,21 @@ from __future__ import annotations
 
 
 def _build_tiff_codec(force_scalar=False):
-    """Build the codec closures. With numpy importable (and not
-    ``force_scalar``), the batch stages vectorize with exact integer
-    arithmetic: LZW code extraction (MSB-first bit unpack + per-batch
+    """Build the codec closures. Unless ``force_scalar`` is set, the
+    batch stages vectorize with exact integer arithmetic: LZW code
+    extraction (MSB-first bit unpack + per-batch
     integer matmul between the deterministic early-change width
     boundaries — the same horizon argument as the GIF decoder, shifted
     by the KwKwK table lag), and the horizontal-differencing predictor
     undo (per-lane modular prefix sums; uint8 accumulate wraps exactly
     like the scalar ``& 0xFF``). The dictionary-growth loop and the LZW
     *encoder* (true sequential data dependencies) stay scalar. Byte
-    parity with the stdlib build is asserted in
-    tests/test_codec_parity.py."""
+    parity with the stdlib build is asserted in tests/test_tiff.py."""
     import struct
 
-    try:
-        import numpy as _np
-    except ImportError:  # pragma: no cover - numpy is baked into the image
-        _np = None
-    np = None if force_scalar else _np
+    import numpy
+
+    np = None if force_scalar else numpy
 
     CLEAR, EOI, FIRST = 256, 257, 258
 

@@ -46,10 +46,10 @@ from functools import lru_cache
 
 @lru_cache(maxsize=None)
 def _build_wav_codec(force_scalar=False):
-    """Build the codec closures. With numpy importable (and not
-    ``force_scalar``), the sample-parallel stages vectorize with exact
-    integer arithmetic: G.711 decode is a 256-entry ``np.take`` LUT and
-    G.711 *encode* a 65536-entry LUT built from the scalar segment
+    """Build the codec closures. Unless ``force_scalar`` is set, the
+    sample-parallel stages vectorize with exact integer arithmetic:
+    G.711 decode is a 256-entry ``np.take`` LUT and G.711 *encode* a
+    65536-entry LUT built from the scalar segment
     encoders (table lookup == the function, by construction); PCM
     8/16/24/32 and IEEE-float decode are ``np.frombuffer`` casts with
     the same truncate-then-clip sequence. The IMA ADPCM state machine
@@ -58,11 +58,9 @@ def _build_wav_codec(force_scalar=False):
     stdlib build is asserted in tests/test_codec_parity.py."""
     import struct
 
-    try:
-        import numpy as _np
-    except ImportError:  # pragma: no cover - numpy is baked into the image
-        _np = None
-    np = None if force_scalar else _np
+    import numpy
+
+    np = None if force_scalar else numpy
 
     # ---- G.711 (ITU-T; tables identical to Sun g711.c / CPython audioop) --
     def _lin2ulaw(x):

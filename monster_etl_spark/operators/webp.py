@@ -61,11 +61,9 @@ def _build_webp_codec(force_scalar: bool = False):
     import struct
     from heapq import heapify, heappop, heappush
 
-    try:
-        import numpy as _np_mod
-    except ImportError:  # pragma: no cover - numpy is baked into the image
-        _np_mod = None
-    np = None if force_scalar else _np_mod
+    import numpy
+
+    np = None if force_scalar else numpy
 
     # kCodeLengthCodeOrder — the permutation in which the 3-bit lengths
     # of the code-length code are stored (spec "Decoding the code lengths")

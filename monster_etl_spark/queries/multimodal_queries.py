@@ -16,21 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from monster_etl_spark.operators.multimodal import (
-    documents_as_adpcm_media,
-    documents_as_animated_gif_media,
-    documents_as_bmp_media,
-    documents_as_dib_avi_media,
-    documents_as_flac_media,
-    documents_as_webp_media,
-    documents_as_g711_media,
-    documents_as_gif_media,
-    documents_as_jpeg_media,
     documents_as_media,
-    documents_as_mjpeg_media,
-    documents_as_png_media,
-    documents_as_tiff_media,
-    documents_as_wav_media,
-    extract_audio_stats,
     fused_media_stats,
     AUDIO_STATS_SCHEMA,
     PIXEL_STATS_SCHEMA,
@@ -62,10 +48,7 @@ from monster_etl_spark.operators.multimodal import (
     _video_frame_stats_worker,
     _wav_media_worker,
     _webp_media_worker,
-    extract_gif_frame_stats,
     extract_image_features,
-    extract_pixel_stats,
-    extract_video_frame_stats,
     resize_images,
 )
 from monster_etl_spark.queries import QuerySpec, load

@@ -3,8 +3,8 @@
 Round-5 verdict "What's wrong #1" asked for the media codecs' hot loops
 to be numpy-vectorized *with the Arrow-kNN discipline*: same closures,
 bit-parity argument in the docstring, and an equality test against the
-pure-stdlib path. Every ``_build_*_codec`` accepts ``force_scalar=True``
-to keep the stdlib path alive; these tests drive both builds over
+pure-stdlib path. The GIF, JPEG, WAV and FLAC builders take
+``force_scalar=True`` to build that path; these tests drive both builds over
 randomized, adversarial, and fixture-shaped inputs and assert the
 outputs are identical BYTES (encoders) / identical tuples (decoders).
 

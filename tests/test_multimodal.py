@@ -514,3 +514,54 @@ def test_audio_header_profile_mixed_corpus(spark):
     assert all(out[i].profiled for i in range(4))
     assert [out[i].n_samples for i in range(4)] == [4, 2, 0, 11]
     assert out[3].duration_ms == 11 * 1000 // 16000
+
+
+@pytest.mark.parametrize(
+    "media_worker, profile_worker",
+    [
+        ("_jpeg_quality_media_worker", "_jpeg_profile_worker"),
+        ("_mp4_media_worker", "_mp4_profile_worker"),
+        ("_mp3_media_worker", "_mp3_profile_worker"),
+        ("_ogg_media_worker", "_ogg_profile_worker"),
+        ("_webm_media_worker", "_webm_profile_worker"),
+        ("_mixed_audio_media_worker", "_audio_profile_worker"),
+    ],
+)
+def test_profile_worker_marks_junk_and_null_unprofiled(media_worker, profile_worker):
+    """One batch of a valid blob, a junk blob and a null: the valid row
+    profiles; the other two read profiled=False with every field null."""
+    import pandas as pd
+
+    docs = pd.DataFrame({"media_id": [4], "text": ["hello profiler"]})
+    (valid,) = pd.concat(list(getattr(mm, media_worker)()(iter([docs]))))["content"]
+    batch = pd.DataFrame(
+        {"media_id": [1, 2, 3], "content": [valid, b"junk bytes, no header", None]}
+    )
+    out = pd.concat(list(getattr(mm, profile_worker)()(iter([batch]))))
+    assert list(out["media_id"]) == [1, 2, 3]
+    assert list(out["profiled"]) == [True, False, False]
+    fields = [c for c in out.columns if c not in ("media_id", "profiled")]
+    assert fields
+    assert out.loc[0, fields].notna().any()
+    assert out.loc[1:, fields].isna().all().all()
+
+
+@pytest.mark.parametrize("worker", ["_png_media_worker", "_jpeg_quality_media_worker"])
+def test_media_adapter_chunks_large_batch(worker):
+    """A 1,100-row batch crosses the 512-row chunk bound twice: three
+    frames, media_id in input order, each blob equal to that document's
+    single-row encode."""
+    import pandas as pd
+
+    n = 1100
+    docs = pd.DataFrame(
+        {"media_id": range(n), "text": [f"doc {i} " + "x" * (i % 37) for i in range(n)]}
+    )
+    frames = list(getattr(mm, worker)()(iter([docs])))
+    assert len(frames) == 3
+    out = pd.concat(frames)
+    assert list(out["media_id"]) == list(range(n))
+    one = getattr(mm, worker)()
+    for i, blob in enumerate(out["content"]):
+        (expect,) = pd.concat(list(one(iter([docs.iloc[i : i + 1]]))))["content"]
+        assert blob == expect
